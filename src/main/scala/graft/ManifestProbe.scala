@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Manifest metadata-layer probe: does the commit-log fold/checkpoint
@@ -42,13 +41,8 @@ object ManifestProbe {
     // walk, zero footer opens). Its own mode: at 10⁶ the sections
     // cross-contaminate GC like v1/dsv2 do.
     val runStats = mode == "stats"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.fs.FastLocalFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def timed[A](body: => A): (A, Double) = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Session-conf A/B harness for the optimization rounds (guide §1):
   * `runMain graft.OptProbe <q1,q2,...> [sfDir] [reps] [variants]`
   * where `variants` is `label:k=v;k=v|label2:k=v|...` — times each
@@ -16,13 +14,8 @@ object OptProbe {
     val reps = if (args.length > 2) args(2).toInt else 3
     val variantSpec =
       if (args.length > 3) args(3) else "base:"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.fs.FastLocalFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val variants: Seq[(String, Map[String, String])] =
       variantSpec.split('|').toSeq.map { v =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming-floor diagnostic: `runMain graft.StreamProbe [sfDir]`
@@ -14,9 +13,7 @@ import org.apache.spark.sql.functions._
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = graft.fs.FastLocalFs.configure(SparkSession.builder()).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local(32)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("probe").toString

@@ -25,18 +25,17 @@ object AsyncPurge {
   private val queue =
     new java.util.concurrent.LinkedBlockingQueue[() => Unit]()
   private val started = new java.util.concurrent.atomic.AtomicBoolean(false)
-  /** True while the worker is executing a task (drain waits on it). */
-  private val workerBusy = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Tasks submitted and not yet finished, queued or running: raised
+    * before a task is queued, lowered after it ran — so a task the
+    * worker has dequeued but not finished still counts, and [[drain]]
+    * waits on this alone. */
+  private val pendingTasks = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def ensureWorker(): Unit =
     if (started.compareAndSet(false, true)) {
       val t = new Thread(() => {
         while (true) {
-          val task = queue.take()
-          workerBusy.set(true)
-          try task() catch {
-            case e: Throwable => log.warn(s"async purge failed: $e")
-          } finally workerBusy.set(false)
+          run(queue.take())
         }
       }, "graft-async-purge")
       t.setDaemon(true)
@@ -45,30 +44,32 @@ object AsyncPurge {
       ()
     }
 
+  private def run(task: () => Unit): Unit =
+    try task() catch {
+      case e: Throwable => log.warn(s"async purge failed: $e")
+    } finally pendingTasks.decrementAndGet()
+
   /** Queue a purge task (idempotent deletion work only). */
   def submit(task: () => Unit): Unit = {
     ensureWorker()
+    pendingTasks.incrementAndGet()
     queue.put(task)
   }
 
   /** Best-effort synchronous drain (shutdown hook / test seam): runs
-    * queued purges on the calling thread, then waits briefly for the
-    * worker's in-flight task. Every task DEQUEUED here runs — the
-    * deadline only stops further dequeuing (an already-polled task
-    * must not be dropped, r18 advice §1). */
+    * queued purges on the calling thread, then waits, up to the
+    * deadline, until no submitted task is pending — including one the
+    * worker has dequeued and is still running. Every task DEQUEUED
+    * here runs — the deadline only stops further dequeuing (an
+    * already-polled task must not be dropped). */
   def drain(timeoutMs: Long): Unit = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     var task = queue.poll()
     while (task != null) {
-      try task() catch {
-        case e: Throwable => log.warn(s"async purge failed: $e")
-      }
+      run(task)
       task = if (System.nanoTime() < deadline) queue.poll() else null
     }
-    while (workerBusy.get() && System.nanoTime() < deadline)
+    while (pendingTasks.get() > 0 && System.nanoTime() < deadline)
       Thread.sleep(5L)
   }
-
-  /** Pending-task count (test seam). */
-  private[graft] def pending: Int = queue.size()
 }

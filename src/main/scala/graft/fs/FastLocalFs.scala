@@ -67,6 +67,9 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
       try {
         val st = getFileStatus(f)
         if (target.isEmpty) st
+        // isDirectory = false for every link, a directory's too: the
+        // stock method hard-codes it (a link status, not the followed
+        // one), and FileContext renames rely on it to move the link
         else new org.apache.hadoop.fs.FileStatus(st.getLen, false,
           st.getReplication, st.getBlockSize, st.getModificationTime,
           st.getAccessTime, st.getPermission, st.getOwner, st.getGroup,

@@ -126,18 +126,20 @@ class LakeCatalog extends TableCatalog {
       throw new NoSuchTableException(ident)
     val tsMillis = Math.floorDiv(timestamp, 1000000L) * 1000L +
       Math.floorDiv(Math.floorMod(timestamp, 1000000L), 1000L)
-    val v = lake.versionAtTimestamp(t, tsMillis)
-    table(t, lake.entriesAtCommit(t, v),
-      dv = lake.dvMapAtCommit(t, v))
+    atCommit(t, lake.versionAtTimestamp(t, tsMillis))
   }
+
+  /** A pinned read: the table as of retained commit `v`, through that
+    * commit's deletion vectors. */
+  private def atCommit(t: String, v: Long, what: String = ""): Table =
+    table(t, lake.entriesAtCommit(t, v, what), dv = lake.dvMapAtCommit(t, v))
 
   private def load(ident: Identifier, version: Option[Long]): Table = {
     val t = tableOf(ident)
     if (!lake.exists(t) && !lake.hasManifest(t) && !lake.hasSchema(t))
       throw new NoSuchTableException(ident)
     version match {
-      case Some(v) => table(t, lake.snapshotEntries(t, v),
-        dv = lake.snapshotDvMap(t, v))
+      case Some(v) => atCommit(t, lake.pinnedCommit(t, v), s"snapshot v$v")
       case None => lake.currentEntriesKeyed(t) match {
         // manifest-backed: the (incarnation, version) identity rides
         // along so LakeTable can serve its scan index from the

@@ -22,13 +22,17 @@ import graft.v3.Lake
   *    is_delta) from the RETAINED commit log ([[Lake.commitHistory]];
   *    the `#ts`/`#op` headers) — what an operator reads before
   *    deciding what to pin or vacuum;
-  *  - `graft_snapshot('cat.tbl')` → (version) — pin the current file
-  *    set ([[Lake.snapshot]]) for later `VERSION AS OF` reads;
+  *  - `graft_snapshot('cat.tbl')` → (version) — pin the current
+  *    manifest commit ([[Lake.snapshot]]) for later `VERSION AS OF`
+  *    reads; the pin adds no commit, and holds the commit log until
+  *    vacuum expires it;
   *  - `graft_compact('cat.tbl', targetBytes)` → (chains_rewritten) —
   *    bin-pack small files ([[Lake.compact]], retained);
   *  - `graft_vacuum('cat.tbl', keepLast)` → (manifests_deleted,
-  *    files_deleted, bytes_freed) — expire old snapshots and GC their
-  *    unreferenced retained files ([[Lake.vacuum]]);
+  *    files_deleted, bytes_freed) — expire all but the newest
+  *    `keepLast` pins (`manifests_deleted` counts them), releasing
+  *    their hold on the commit log, and GC retained files nothing
+  *    references any more ([[Lake.vacuum]]);
   *  - `table_changes('cat.tbl', from, to)` → the commit-grain batch
   *    CDC feed ([[Lake.changesBetweenCommits]]), a pure read returning
   *    the feed's own distributed plan;

@@ -1092,7 +1092,7 @@ class Lake(spark: SparkSession, val root: String) {
     } else dirs.map(p => fs.delete(p, true)).exists(identity)
   }
 
-  /** Drop a whole table (its snapshot manifests and retired files go
+  /** Drop a whole table (its snapshot pins and retired files go
     * with it — a pinned read of a dropped table has nothing true left
     * to say). The snapshot HIGH-WATER mark survives the drop: a
     * recreate must not reuse the dropped table's snapshot numbers, or
@@ -1789,28 +1789,35 @@ class Lake(spark: SparkSession, val root: String) {
     best
   }
 
-  /** (absolute path, bytes) of the file set AT a retained commit-log
-    * version — the `TIMESTAMP AS OF` read source. The CURRENT version
-    * serves straight from the manifest (zero filesystem calls); an
-    * OLDER version resolves each file live-or-retired with one
-    * getFileStatus per location (pinned reads only), failing loudly
-    * when a file was rewritten without retention or vacuum-expired —
-    * the same invalidation contract as [[readAt]]. */
-  private[graft] def entriesAtCommit(table: String,
-                                     version: Long): Seq[(String, Long)] = {
-    val (kinds, inc) = manifestState(table)
+  /** The folded (table-relative path, bytes) set at `version` of the
+    * caller's commit-log listing — loud when retention expired it. */
+  private def foldAt(table: String, kinds: Seq[(Long, Boolean)],
+                     inc: String, version: Long): Seq[(String, Long)] = {
     require(kinds.exists(_._1 == version),
       s"commit v$version of $table is not retained (expired by " +
         s"manifest retention; retained: ${kinds.map(_._1).mkString(",")})")
-    val rels = resolveManifest(table, inc, kinds, version)
+    resolveManifest(table, inc, kinds, version)
+  }
+
+  /** (absolute path, bytes) of the file set AT a retained commit-log
+    * version — the source of every pinned read (`TIMESTAMP AS OF`,
+    * `VERSION AS OF`, [[readAt]], [[restoreTable]]). The CURRENT
+    * version serves straight from the manifest (zero filesystem
+    * calls); an OLDER version resolves each file live-or-retired with
+    * one getFileStatus per location, failing loudly ("`what` of table
+    * invalidated") when a file was rewritten without retention or
+    * vacuum-expired. */
+  private[graft] def entriesAtCommit(table: String, version: Long,
+                                     what: String = "")
+      : Seq[(String, Long)] = {
+    val (kinds, inc) = manifestState(table)
+    val rels = foldAt(table, kinds, inc, version)
     val base = fs.makeQualified(new Path(dir(table))).toString
     if (kinds.last._1 == version)
       rels.map { case (rel, b) => (s"$base/$rel", b) }
     else
-      // the shared pinned-read resolution (one getFileStatus per
-      // location, loud invalidation) — was an inline copy that could
-      // drift from the contract
-      resolveLiveOrRetired(table, rels.map(_._1), s"commit v$version")
+      resolveLiveOrRetired(table, rels.map(_._1),
+        if (what.nonEmpty) what else s"commit v$version")
   }
 
   /** The (adds, removes) of each DELTA commit in `(fromExclusive,
@@ -1849,13 +1856,17 @@ class Lake(spark: SparkSession, val root: String) {
     * twin of SQL `TIMESTAMP AS OF` ([[graft.sources.LakeCatalog]]).
     * Rewritten-away files resolve against the retention area; missing
     * history fails loudly ([[entriesAtCommit]]). */
-  def readAtTimestamp(table: String, tsMillis: Long): DataFrame = {
-    val v = versionAtTimestamp(table, tsMillis)
-    val schema = effectiveSchema(table)
+  def readAtTimestamp(table: String, tsMillis: Long): DataFrame =
+    readAtCommit(table, versionAtTimestamp(table, tsMillis))
+
+  /** The table as of retained commit `v`, through that commit's
+    * deletion vectors — the one pinned-read path. */
+  private def readAtCommit(table: String, v: Long,
+                           what: String = ""): DataFrame =
     readEntries(table,
-      entriesAtCommit(table, v).map { case (p, b) => (chainOfRel(p), p, b) },
-      schema, dvMapAtCommit(table, v))
-  }
+      entriesAtCommit(table, v, what).map { case (p, b) =>
+        (chainOfRel(p), p, b) },
+      effectiveSchema(table), dvMapAtCommit(table, v))
 
   /** Partition value parsed from a path (manifest-relative or
     * absolute): the `chain_name=` segment, Hive-unescaped. */
@@ -1909,17 +1920,6 @@ class Lake(spark: SparkSession, val root: String) {
     }
   }
 
-  /** [[readAt]]'s live/retired file resolution returning (absolute
-    * path, bytes) — the `VERSION AS OF` source for the SQL catalog.
-    * O(files) driver stat calls, paid by PINNED reads only (the
-    * snapshot manifest stores paths, not sizes; exactly the files
-    * [[readAt]] would open). Fails loudly on an invalidated snapshot,
-    * same contract as [[readAt]]. */
-  private[graft] def snapshotEntries(table: String,
-                                     version: Long): Seq[(String, Long)] =
-    resolveLiveOrRetired(table, manifestFiles(table, version),
-      s"snapshot v$version")
-
   /** Resolve table-relative paths to (absolute path, bytes), each
     * checked live-then-retired with ONE getFileStatus per location
     * (not exists-then-stat, which is two metadata RPCs and a window
@@ -1941,20 +1941,6 @@ class Lake(spark: SparkSession, val root: String) {
       (st.getPath.toString, st.getLen)
     }
 
-  /** File-granularity CDC between two pinned snapshots — the
-    * `table_changes(from, to)` read: every row of a file the `to`
-    * snapshot dropped surfaces as `_change_type = 'delete'`, every
-    * row of a file it added as `'insert'` (an update is its
-    * delete+insert pair, exactly how the published formats
-    * reconstruct changes when no per-row change log was written).
-    * Both sides resolve live-or-retired, so a retain-mode
-    * upsert/compact keeps the delta replayable until [[vacuum]];
-    * missing files fail loudly ([[resolveLiveOrRetired]]). The diff
-    * itself is a manifest set-difference — zero listings, O(files)
-    * driver work only for the CHANGED files. Downstream incremental
-    * consumers join deletes against their state by key; pure-append
-    * history yields inserts only ([[readSince]] is the cheaper
-    * special case). */
   /** Whether a planned batch needs deletion-vector handling at all —
     * the streaming source's fast-path test (a DV-free range keeps the
     * zero-copy per-file partition plan). */
@@ -1995,21 +1981,33 @@ class Lake(spark: SparkSession, val root: String) {
     parts.result().reduce(_.unionByName(_))
   }
 
+  /** File-granularity CDC between two pinned snapshots — the
+    * `table_changes(from, to)` read: every row of a file the `to`
+    * snapshot dropped surfaces as `_change_type = 'delete'`, every
+    * row of a file it added as `'insert'` (an update is its
+    * delete+insert pair, exactly how the published formats
+    * reconstruct changes when no per-row change log was written).
+    * Each side is the fold of its pin's commit; both resolve
+    * live-or-retired, so a retain-mode
+    * upsert/compact keeps the delta replayable until [[vacuum]];
+    * missing files fail loudly ([[resolveLiveOrRetired]]). The diff
+    * itself is a manifest set-difference — zero listings, O(files)
+    * driver work only for the CHANGED files. Downstream incremental
+    * consumers join deletes against their state by key; pure-append
+    * history yields inserts only ([[readSince]] is the cheaper
+    * special case). */
   def tableChanges(table: String, fromVersion: Long,
                    toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
       s"tableChanges of $table needs fromVersion <= toVersion " +
         s"(got $fromVersion > $toVersion)")
-    // each snapshot body is read ONCE (file set + anchor headers)
-    val fromBody = snapshotBody(table, fromVersion)
-    val toBody = snapshotBody(table, toVersion)
-    def filesOf(b: Seq[String]) = b.filterNot(_.startsWith("#")).toSet
-    val from = filesOf(fromBody)
-    val to = filesOf(toBody)
-    // ONE commit-log listing decides the completeness guard AND feeds
-    // the rewrite-set walk below: separate listings would let a
-    // retention cut between them expire a rewrite the guard had
-    // validated as retained, and its churn would flow silently
+    val cFrom = pinnedCommit(table, fromVersion)
+    val cTo = pinnedCommit(table, toVersion)
+    // ONE commit-log listing folds both sides, decides the
+    // completeness guard AND feeds the rewrite-set walk below:
+    // separate listings would let a retention cut between them expire
+    // a rewrite the guard had validated as retained, and its churn
+    // would flow silently
     val (kinds, inc) = manifestState(table)
     // dataChange = false guard: a compaction/clustering between the two
     // snapshots swaps files WITHOUT changing rows — diffing through it
@@ -2019,40 +2017,13 @@ class Lake(spark: SparkSession, val root: String) {
     // change feeds; a file-set diff cannot, so it refuses loudly and
     // points at the commit-grain feed, which can.
     // COMPLETENESS: the side-aware check below only sees rewrites the
-    // RETAINED commit log still describes. Anchored snapshots (the
-    // `#inc=`/`#commit=` headers pinned with the file set) make the
-    // check provably complete: every commit between the anchors must
-    // still be retained under the same incarnation — otherwise a
-    // maintenance rewrite could hide in the expired gap while
-    // retain-mode keeps BOTH snapshot sides resolvable from the
-    // retention area, and its churn would flow through silently.
-    // Refuse loudly instead. Pre-anchor snapshots keep the legacy
-    // retained-rewrites-only check.
-    (parseSnapshotAnchor(fromBody), parseSnapshotAnchor(toBody)) match {
-      case (Some((incF, cFrom)), Some((incT, cTo))) =>
-        require(incF == inc && incT == inc,
-          s"table_changes($fromVersion, $toVersion) of $table: the " +
-            "snapshots were pinned under a different manifest " +
-            "incarnation (the table has been dropped and recreated) - " +
-            "their commit anchors have no relation to the current " +
-            "history")
-        val retained = kinds.map(_._1).toSet
-        // (cFrom, cTo], NOT [cFrom, cTo]: a rewrite at or before cFrom
-        // is already baked into the from-snapshot's pinned file set -
-        // only commits strictly after the from-anchor can hide churn,
-        // so requiring cFrom itself to stay retained made valid diffs
-        // refuse spuriously once the anchor crossed the retention cut
-        val missing = ((cFrom + 1) to cTo).filterNot(retained)
-        require(missing.isEmpty,
-          s"table_changes($fromVersion, $toVersion) of $table: " +
-            s"commit(s) ${missing.take(5).mkString(", ")} between the " +
-            s"snapshots' anchors [v$cFrom, v$cTo] have been expired " +
-            "by manifest retention - a maintenance rewrite there " +
-            "would be invisible to the churn guard and its churn " +
-            "would replay silently; diff a fresher range or raise " +
-            "manifest.minRetainedCommits")
-      case _ => ()
-    }
+    // RETAINED commit log still describes. Pins hold the log, so both
+    // anchors — and, the log being a contiguous suffix, every commit
+    // between them — normally are; a retention cut racing a vacuum
+    // that just expired the from-pin is the exception, and the fold
+    // refuses it loudly rather than let a rewrite hide in the gap.
+    val from = foldAt(table, kinds, inc, cFrom).map(_._1).toSet
+    val to = foldAt(table, kinds, inc, cTo).map(_._1).toSet
     // SIDE-AWARE matching: a snapshot diff straddles a rewrite only
     // when its REMOVED side contains files the rewrite removed, or its
     // ADDED side files the rewrite added. Matching either side against
@@ -2078,8 +2049,8 @@ class Lake(spark: SparkSession, val root: String) {
     // and files common to both snapshots whose VECTOR changed emit
     // the position-diff rows — the merge-on-read delete's snapshot
     // diff, which a bare file-set diff cannot see
-    val dvFrom = parseSnapshotDvMap(fromBody)
-    val dvTo = parseSnapshotDvMap(toBody)
+    val dvFrom = resolveDvMap(table, inc, kinds, cFrom)
+    val dvTo = resolveDvMap(table, inc, kinds, cTo)
     def files(rels: Seq[String], dvPin: Map[String, Dv.Ref],
               include: Map[String, Array[Long]] = Map.empty)
         : Seq[ChangeFile] =
@@ -2118,15 +2089,6 @@ class Lake(spark: SparkSession, val root: String) {
           (r, u) }.toMap)
     side(delFiles, "delete").unionByName(side(insFiles, "insert"))
   }
-
-  /** The dv map a snapshot body pinned (`#dv=` lines; empty for
-    * pre-dv snapshots). */
-  private def parseSnapshotDvMap(body: Seq[String])
-      : Map[String, Dv.Ref] =
-    body.filter(_.startsWith("#dv=")).map { l =>
-      val f = l.stripPrefix("#dv=").split('\t')
-      (new String(unb64(f(0)), "UTF-8"), Dv.Ref(f(1), f(2).toLong))
-    }.toMap
 
   /** Table-relative paths swapped by RETAINED rewrite-only commits,
     * split by side: (what rewrites REMOVED, what they ADDED) —
@@ -2694,9 +2656,11 @@ class Lake(spark: SparkSession, val root: String) {
   private def releaseCommitLock(lock: Path, token: String): Unit =
     if (ownsLock(lock, token)) fs.delete(lock, false)
 
-  // Manifests are PLANNING state — time travel is [[snapshot]]'s job;
-  // version files write-temp-then-rename so readers never observe a
-  // torn manifest, and retention is checkpoint-anchored (below).
+  // The commit log is the table's one version log: planning reads its
+  // latest fold, time travel ([[snapshot]] pins, `TIMESTAMP AS OF`)
+  // folds older versions; version files write-temp-then-rename so
+  // readers never observe a torn manifest, and retention is
+  // checkpoint-anchored and held by live pins (below).
 
   /** How many delta commits may stack on a checkpoint before the next
     * commit writes a fresh checkpoint. Bounds a cold driver's fold to
@@ -2713,7 +2677,8 @@ class Lake(spark: SparkSession, val root: String) {
     * have stacked since the last checkpoint — at which point every
     * version older than the PREVIOUS checkpoint is deleted (two
     * checkpoint generations stay readable, so a reader that listed
-    * versions just before this publish still folds its chain). */
+    * versions just before this publish still folds its chain), subject
+    * to the retention floor and to the live pins' hold on the log. */
   private def publishManifest(table: String,
                               entries: Seq[(String, Long)],
                               delta: Option[(Seq[(String, Long)],
@@ -2849,11 +2814,16 @@ class Lake(spark: SparkSession, val root: String) {
       // commit 27 of 100). The floor's cost is a few tiny delta files
       // kept longer; folds are unaffected (they start at the LATEST
       // checkpoint).
+      // A PIN HOLDS THE LOG: the cut never passes the checkpoint at or
+      // before the oldest live pin's commit, so every pinned commit
+      // stays foldable until vacuum expires the pin. Pins are written
+      // under this same commit lock, so the list read here is complete.
       val minRetain = tableProperties(table)
         .get("manifest.minRetainedCommits").flatMap(_.toLongOption)
         .getOrElse(48L)
+      val hold = pinnedCommits(table, inc).minOption.getOrElse(Long.MaxValue)
       val cut = kinds.filter(!_._2).map(_._1)
-        .filter(_ <= v - minRetain).lastOption
+        .filter(p => p <= v - minRetain && p <= hold).lastOption
       cut.foreach { p =>
         kinds.filter(_._1 < p).foreach { case (old, wasDelta) =>
           fs.delete(new Path(d,
@@ -5380,37 +5350,45 @@ class Lake(spark: SparkSession, val root: String) {
         else (p, b) => bloomMayContain(p, b, key, values))
   }
 
-  // ── Snapshots: manifest-based time travel ──────────────────────────
+  // ── Snapshots: named pins on commit-log versions ───────────────────
   //
   // The exact-reproducibility need every training-data lake hits:
   // "read the corpus EXACTLY as it was when run X trained", while
-  // appends keep landing. A snapshot is one manifest file listing the
-  // table's data files at commit time (paths relative to the table
-  // dir, so the lake can move) — the Iceberg/Delta idea at its
-  // smallest: metadata names files, readers plan from metadata, and a
-  // version is immutable because parquet files are append-only.
-  // Manifests are driver-small (file lists, thousands of entries — the
-  // model-state rule); the READ is a normal distributed parquet scan
-  // over exactly the named files, partition values still parsed from
-  // the paths. COMPACTION and UPSERT rewrite files, so each
-  // invalidates snapshots taken before it (an upsert between a
-  // readSince base and target is exactly the "rewritten files look
-  // new" hazard); [[readAt]] detects missing files and fails loudly
-  // with the invalidating paths instead of silently returning a
-  // partial corpus — retention policy (keep pre-compaction files until
-  // snapshots expire) is a deployment concern layered above, exactly
-  // as in the published table formats.
+  // appends keep landing. The commit log already records every
+  // version's file set and deletion vectors, so a snapshot is only a
+  // PIN: `_snapshots/<table>/vN.txt` holds the anchor of the manifest
+  // commit it was taken at (`#inc=<incarnation>`, `#commit=<version>`)
+  // and nothing else. Every pinned read ([[readAt]], [[readSince]],
+  // [[restoreTable]], [[tableChanges]], SQL `VERSION AS OF`) folds the
+  // pinned commit exactly like `TIMESTAMP AS OF` does:
+  // [[entriesAtCommit]] → [[resolveLiveOrRetired]] → [[readEntries]],
+  // with [[dvMapAtCommit]] — one version log, not two.
+  //
+  // PINS HOLD THE LOG: [[publishManifest]]'s retention cut never
+  // removes the checkpoint at or before the oldest live pin's commit,
+  // nor anything after it, so a pinned commit stays foldable until
+  // [[vacuum]] expires the pin. A pin is numbered and written under
+  // the table's commit lock, so the cut always sees it. A pin adds no
+  // commit (`table_history` is unchanged by it).
+  //
+  // COMPACTION and UPSERT rewrite files. Under `retain = true` the
+  // originals move to the retention area and pinned reads resolve them
+  // there; without it a pinned read names the missing file and fails
+  // loudly ("invalidated") instead of returning a partial corpus.
 
-  // manifests live OUTSIDE the table directory: anything under it —
-  // even underscore-prefixed — can trip partition discovery on the
-  // live read's recursive listing
+  // pins live OUTSIDE the table directory: anything under it — even
+  // underscore-prefixed — can trip partition discovery on the live
+  // read's recursive listing
   private def snapDir(table: String) = new Path(s"$root/_snapshots/$table")
+
+  private def pinPath(table: String, version: Long) =
+    new Path(snapDir(table), f"v$version%09d.txt")
 
   // the retention area: rewritten-away data files move here (same-fs
   // rename, table-relative paths preserved) so snapshots taken before
   // the rewrite stay READABLE instead of failing — the published
   // formats' keep-until-expiry policy, implemented. Outside the table
-  // dir for the same partition-discovery reason as the manifests.
+  // dir for the same partition-discovery reason as the pins.
   private def retiredDir(table: String) = new Path(s"$root/_retired/$table")
 
   /** Move replaced data files into the retention area. Same-filesystem
@@ -5435,123 +5413,57 @@ class Lake(spark: SparkSession, val root: String) {
         failed.take(3).mkString(", "))
   }
 
-  /** Commit the table's current file set as the next snapshot version.
-    * Returns the new version number (1-based).
+  /** Pin the table's current manifest commit as the next snapshot
+    * version and return its number (1-based, never reused — see
+    * [[expiredHighWater]]). The pin body is the commit anchor only
+    * (`#inc=`/`#commit=`); it adds no commit to the log.
     *
-    * COMMIT PROTOCOL (two-phase, torn-read-free): (1) atomically claim
-    * the version with a create-exclusive `.lock` file — losers bump to
-    * the next number; (2) write the manifest BODY to a hidden temp
-    * file, then rename it onto the final `.txt` name. Readers resolve
-    * only `.txt` files, and the rename is atomic, so a reader can
-    * never observe a half-written manifest (the create-exclusive-only
-    * protocol exposed the final path while bytes were still
-    * streaming). A writer that crashes mid-commit leaves a stale
-    * `.lock`; later writers skip that version number — a gap in the
-    * version sequence, never a corrupt snapshot.
+    * COMMIT PROTOCOL: the number is chosen and the pin written while
+    * holding the table's commit lock ([[acquireCommitLock]]), which
+    * already serialises every writer across processes — so two pins
+    * never share a number, and [[publishManifest]]'s retention cut
+    * (same lock) always sees the pin it must hold the log for. The
+    * body goes to a hidden temp file first and is renamed onto the
+    * final `.txt` name, so a reader never observes a half-written
+    * pin; a crash leaves only the temp, which [[vacuum]] sweeps.
     *
-    * STORE CONTRACT: requires atomic create-exclusive (`O_EXCL`) and
-    * atomic same-directory rename — true on HDFS and POSIX local
-    * filesystems. Raw object stores without conditional puts provide
-    * NEITHER; deploy there with a coordination layer (conditional-put
-    * manifests or an external lock service), exactly as the published
-    * table formats do for their commit step.
+    * STORE CONTRACT: requires atomic create-exclusive (`O_EXCL`, the
+    * lock) and atomic same-directory rename — true on HDFS and POSIX
+    * local filesystems. Raw object stores without conditional puts
+    * provide NEITHER; deploy there with a coordination layer, exactly
+    * as the published table formats do for their commit step.
     *
-    * IN-FLIGHT APPENDS: the file listing is STABILIZED — re-listed
-    * until two consecutive passes agree — so a snapshot taken while a
-    * foreign writer's job commit is renaming part files into place
-    * cannot pin half a segment. Appends in this engine are
-    * driver-sequential, so the first pass is normally already stable;
-    * if the table keeps changing across 8 passes the snapshot fails
-    * loudly rather than committing an arbitrary cut. */
+    * Refuses a table without a manifest (a foreign writer's table):
+    * [[refreshManifest]] adopts it first. */
   def snapshot(table: String): Long = {
-    // a manifest IS a stable listing (one atomic file, committed under
-    // the table lock) — pin its file set directly; the re-list-until-
-    // stable loop survives only for manifest-less foreign tables,
-    // where a racing writer's half-renamed job commit is observable
-    // anchor the pin to the manifest commit it was taken at (one
-    // manifestState read decides both, so the pair cannot straddle a
-    // racing commit): the `#inc=`/`#commit=` headers let tableChanges
-    // prove whether any maintenance rewrite could hide in the
-    // (fromCommit, toCommit] range after retention expires it —
-    // without the anchor that check is impossible and an expired
-    // rewrite's churn would flow through silently (parsers skip `#`
-    // lines, so pre-anchor snapshots read back unchanged)
-    val (files, anchor, pinnedDv) = {
+    val (lock, token) = acquireCommitLock(table)
+    try {
       val (kinds, inc) = manifestState(table)
-      kinds.lastOption match {
-        case Some((mv, _)) =>
-          (resolveManifest(table, inc, kinds, mv).map(_._1).sorted,
-            Some((inc, mv)),
-            resolveDvMap(table, inc, kinds, mv))
-        case None =>
-          val base = fs.makeQualified(new Path(dir(table))).toString
-          def listing(): Seq[String] = listInventory(table).map(_._2)
-            .map(_.stripPrefix(base).stripPrefix("/"))
-            .sorted
-          var fs0 = listing()
-          var again = listing()
-          var tries = 0
-          while (fs0 != again && tries < 8) {
-            fs0 = again; again = listing(); tries += 1
-          }
-          require(fs0 == again,
-            s"table $table is changing beneath snapshot (append in " +
-              "flight) - retry when writes quiesce")
-          (fs0, None, Map.empty[String, Dv.Ref])
+      val commit = kinds.lastOption.map(_._1).getOrElse(
+        throw new IllegalArgumentException(s"table $table has no " +
+          "manifest to pin - adopt it with refreshManifest first"))
+      fs.mkdirs(snapDir(table))
+      val v = math.max(snapshotVersions(table).lastOption.getOrElse(0L),
+        expiredHighWater(table)) + 1
+      val tmp = new Path(snapDir(table),
+        f".v$v%09d-tmp-${System.nanoTime()}")
+      try {
+        val out = fs.create(tmp, false)
+        try out.write(s"#inc=$inc\n#commit=$commit".getBytes("UTF-8"))
+        finally out.close()
+        // publish fence, as in manifestTxn: a claim broken as stale
+        // may have let a rival pick the same number
+        if (!ownsLock(lock, token)) throw new Lake.ConcurrentWriteException(
+          s"snapshot of $table lost its commit claim (broken as stale) - " +
+            "nothing pinned; retry")
+        if (!fs.rename(tmp, pinPath(table, v)))
+          throw new java.io.IOException(
+            s"snapshot commit failed renaming $tmp -> ${pinPath(table, v)}")
+      } catch {
+        case e: Throwable => fs.delete(tmp, false); throw e
       }
-    }
-    // the pinned dv refs ride the snapshot body ('#'-prefixed: old
-    // parsers skip them): a pinned read must apply the vectors
-    // CURRENT AT PIN TIME, not whatever grew later
-    val body = anchor.toSeq.flatMap { case (inc, mv) =>
-      Seq(s"#inc=$inc", s"#commit=$mv") } ++
-      pinnedDv.toSeq.sortBy(_._1).map { case (rel, r) =>
-        s"#dv=${b64(rel.getBytes("UTF-8"))}\t${r.name}\t${r.cardinality}"
-      } ++ files
-    fs.mkdirs(snapDir(table))
-    var v = math.max(snapshotVersions(table).lastOption.getOrElse(0L),
-      expiredHighWater(table)) + 1
-    while (true) {
-      val lock = new Path(snapDir(table), f"v$v%09d.lock")
-      val txt = new Path(snapDir(table), f"v$v%09d.txt")
-      if (fs.exists(txt)) v += 1 // committed winner: next number
-      else {
-        val claimed =
-          try { fs.create(lock, false).close(); true }
-          catch {
-            // a create failure is only a lost RACE if someone's claim
-            // or manifest actually exists; otherwise the store itself
-            // is broken (unwritable dir, disk full) and retrying with
-            // higher numbers would spin forever — fail loudly
-            case e: java.io.IOException =>
-              if (fs.exists(lock) || fs.exists(txt)) false else throw e
-          }
-        if (!claimed) v += 1 // held (or crashed) claim: skip the number
-        else {
-          // from here the claim is OURS: clean it (and the temp) up on
-          // ANY failure, else each transient write error would burn a
-          // version number and litter the dir until the vacuum sweep
-          val tmp = new Path(snapDir(table),
-            f".v$v%09d-tmp-${System.nanoTime()}")
-          try {
-            val out = fs.create(tmp, true)
-            out.write(body.mkString("\n").getBytes("UTF-8"))
-            out.close()
-            if (!fs.rename(tmp, txt))
-              throw new java.io.IOException(
-                s"snapshot commit failed renaming $tmp -> $txt")
-          } catch {
-            case e: Throwable =>
-              fs.delete(tmp, false)
-              fs.delete(lock, false)
-              throw e
-          }
-          fs.delete(lock, false)
-          return v
-        }
-      }
-    }
-    v // unreachable
+      v
+    } finally releaseCommitLock(lock, token)
   }
 
   /** Highest version number ever EXPIRED by [[vacuum]] — a zero-byte
@@ -5577,39 +5489,77 @@ class Lake(spark: SparkSession, val root: String) {
       .sorted
   }
 
+  /** The `(incarnation, commit)` anchor pin `version` holds; None when
+    * the pin is gone (expired, possibly mid-walk) or carries no
+    * anchor. */
+  private def pinAnchor(table: String, version: Long)
+      : Option[(String, Long)] = {
+    val lines =
+      try {
+        val in = fs.open(pinPath(table, version))
+        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+          "UTF-8").split("\n").toSeq
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => return None }
+    def head(key: String) =
+      lines.collectFirst { case l if l.startsWith(key) => l.stripPrefix(key) }
+    for (inc <- head("#inc="); mv <- head("#commit=").flatMap(_.toLongOption))
+      yield (inc, mv)
+  }
+
+  /** The manifest commit snapshot `version` pins. Fails with "no
+    * snapshot" when the pin is missing or expired, carries no anchor,
+    * or was taken under another incarnation of the table (dropped and
+    * recreated since) — a stored handle must never resolve to an
+    * unrelated state. */
+  private[graft] def pinnedCommit(table: String, version: Long): Long = {
+    val inc = currentIncarnation(table)
+    pinAnchor(table, version).collect { case (i, c) if inc.contains(i) => c }
+      .getOrElse(throw new IllegalArgumentException(
+        s"no snapshot v$version for table $table"))
+  }
+
+  /** The commits the live pins of incarnation `inc` hold, ascending. */
+  private def pinnedCommits(table: String, inc: String): Seq[Long] =
+    snapshotVersions(table).flatMap(v =>
+      pinAnchor(table, v).collect { case (`inc`, c) => c })
+
   /** Incremental read: ONLY the rows appended after snapshot
     * `sinceVersion` — the incremental-ETL primitive (downstream
     * pipelines process what's new, no streaming infrastructure
-    * needed). Implemented as a manifest set-difference: files in the
-    * target snapshot (or the live inventory when `upTo` is None) that
-    * the base manifest doesn't name. Parquet files are append-only, so
-    * file-level difference IS row-level difference — as long as no
-    * compaction ran in between; a compacted file would appear "new"
-    * while carrying old rows, so this fails loudly if any base-
-    * manifest file has vanished (same invalidation contract as
-    * [[readAt]]). */
+    * needed). A set-difference of commit-log folds: files of the
+    * target pin's commit (or of the current commit when `upTo` is
+    * None) that the base pin's commit doesn't name — metadata only,
+    * no filesystem call. Parquet files are append-only, so file-level
+    * difference IS row-level difference — as long as no rewrite ran in
+    * between; a compacted file would appear "new" while carrying old
+    * rows, so this fails loudly if any base file is no longer live
+    * (same invalidation contract as [[readAt]]). */
   def readSince(table: String, sinceVersion: Long,
                 upTo: Option[Long] = None): DataFrame = {
-    val baseBody = snapshotBody(table, sinceVersion)
-    val baseFiles = baseBody.filterNot(_.startsWith("#")).toSet
+    val base = pinnedCommit(table, sinceVersion)
+    val target = upTo.map(pinnedCommit(table, _))
+    // ONE commit-log listing serves every fold below
+    val (kinds, inc) = manifestState(table)
+    val baseFiles = foldAt(table, kinds, inc, base).map(_._1).toSet
+    val latest = kinds.last._1
+    val liveSet = foldAt(table, kinds, inc, latest).map(_._1).toSet
+    val targetC = target.getOrElse(latest)
+    val targetFiles = foldAt(table, kinds, inc, targetC)
     // deletion-vector drift breaks append-only semantics exactly like
     // a CoW rewrite breaks it (rows changed without file swaps), so
     // it refuses the same way: every base file's vector must be
     // UNCHANGED between the base pin and the target state, and no
     // fresh file may carry one
-    val baseDv = parseSnapshotDvMap(baseBody)
-    val targetDv = upTo match {
-      case Some(v) => parseSnapshotDvMap(snapshotBody(table, v))
-      case None => dvMapOf(table)
-    }
+    val baseDv = resolveDvMap(table, inc, kinds, base)
+    val targetDv = resolveDvMap(table, inc, kinds, targetC)
     val dvDrift = baseFiles.filter(r => baseDv.get(r) != targetDv.get(r))
     require(dvDrift.isEmpty,
       s"snapshot v$sinceVersion of $table invalidated for incremental " +
         "read - deletion vectors changed on base file(s) (rows were " +
         "deleted merge-on-read; the table is no longer append-only " +
         s"over the base): ${dvDrift.take(5).mkString(", ")}")
-    val gone = baseFiles.filterNot(r =>
-      fs.exists(new Path(s"${dir(table)}/$r")))
+    val gone = baseFiles.filterNot(liveSet)
     // NOTE: retention does NOT rescue incremental reads — a retained
     // base file proves the snapshot is still READABLE (readAt), but
     // the live table is no longer a superset of it, so "files newer
@@ -5620,131 +5570,40 @@ class Lake(spark: SparkSession, val root: String) {
         s"upsert rewrote files since) - incremental read would mistake " +
         s"rewritten files for new rows (retention cannot restore " +
         s"append-only semantics): ${gone.take(5).mkString(", ")}")
-    val target = upTo match {
-      case Some(v) => manifestFiles(table, v)
-      case None =>
-        val base = fs.makeQualified(new Path(dir(table))).toString
-        fileInventory(table).map(_._2)
-          .map(_.stripPrefix(base).stripPrefix("/"))
-    }
-    val fresh = target.filterNot(baseFiles)
-    if (fresh.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        effectiveSchema(table))
-    // the TARGET's files must exist too: a compaction after the target
-    // snapshot would otherwise surface as a raw path-not-found (or a
+    val fresh = targetFiles.filterNot(e => baseFiles(e._1))
+    // the TARGET's new files must be live too: a rewrite after the
+    // target pin would otherwise surface as a raw path-not-found (or a
     // silent partial read under ignoreMissingFiles) instead of this
     // API's loud-invalidation contract
-    val freshGone = fresh.filterNot(r =>
-      fs.exists(new Path(s"${dir(table)}/$r")))
+    val freshGone = fresh.map(_._1).filterNot(liveSet)
     require(freshGone.isEmpty,
       s"incremental read of $table invalidated - target files missing " +
         s"(rewritten by compaction or upsert, or expired): " +
         s"${freshGone.take(5).mkString(", ")}")
-    val freshDvd = fresh.filter(targetDv.contains)
+    val freshDvd = fresh.map(_._1).filter(targetDv.contains)
     require(freshDvd.isEmpty,
       s"incremental read of $table invalidated - file(s) appended " +
         "since the base already carry deletion vectors (rows deleted " +
         "merge-on-read; 'files newer than the base' no longer means " +
         s"'rows appended since'): ${freshDvd.take(5).mkString(", ")}")
-    val schema = effectiveSchema(table)
-    inSchemaOrder(spark.read.schema(schema)
-      .option("basePath", dir(table))
-      .parquet(fresh.map(r => s"${dir(table)}/$r"): _*), schema)
+    val tableDir = fs.makeQualified(new Path(dir(table))).toString
+    readEntries(table,
+      fresh.map { case (rel, b) => (chainOfRel(rel), s"$tableDir/$rel", b) },
+      effectiveSchema(table), Map.empty)
   }
 
-  private def manifestFiles(table: String, version: Long): Seq[String] =
-    snapshotBody(table, version).filterNot(_.startsWith("#"))
-
-  /** The (incarnation, manifest commit) a snapshot was anchored to at
-    * pin time, parsed from its already-read body — None for pre-anchor
-    * snapshots and manifest-less foreign tables. */
-  private def parseSnapshotAnchor(body: Seq[String])
-      : Option[(String, Long)] = {
-    val heads = body.takeWhile(_.startsWith("#"))
-    for {
-      inc <- heads.find(_.startsWith("#inc="))
-        .map(_.stripPrefix("#inc="))
-      mv <- heads.find(_.startsWith("#commit="))
-        .flatMap(_.stripPrefix("#commit=").toLongOption)
-    } yield (inc, mv)
-  }
-
-  private def snapshotBody(table: String, version: Long): Seq[String] = {
-    val p = new Path(snapDir(table), f"v$version%09d.txt")
-    require(fs.exists(p), s"no snapshot v$version for table $table")
-    val in = fs.open(p)
-    val body = new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-    in.close()
-    body.split("\n").toSeq.filter(_.nonEmpty)
-  }
-
-  /** Read the table EXACTLY as of snapshot `version`. A manifest file
-    * no longer live is resolved against the RETENTION area (files a
-    * retain-mode [[upsert]]/[[compact]] moved aside) — partition
-    * values parse identically there because retirement preserves the
-    * table-relative path. Fails loudly if any file is in neither
-    * place (rewritten without retention, or [[vacuum]]-expired) — a
-    * partial corpus silently standing in for a pinned one is the
-    * failure mode this API exists to prevent. */
-  def readAt(table: String, version: Long): DataFrame = {
-    val body = snapshotBody(table, version)
-    val rel = body.filterNot(_.startsWith("#"))
-    if (rel.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        effectiveSchema(table))
-    val pinnedDv = parseSnapshotDvMap(body)
-    val live = rel.filter(r => fs.exists(new Path(s"${dir(table)}/$r")))
-    val liveSet = live.toSet
-    val retired = rel.filterNot(liveSet)
-      .filter(r => fs.exists(new Path(retiredDir(table), r)))
-    val missing = rel.filterNot(liveSet).filterNot(retired.toSet)
-    require(missing.isEmpty,
-      s"snapshot v$version of $table invalidated - missing files " +
-        s"(rewritten by compaction or upsert without retention, or " +
-        s"vacuum-expired): ${missing.take(5).mkString(", ")}" +
-        (if (missing.size > 5) s" (+${missing.size - 5} more)" else ""))
-    val schema = effectiveSchema(table)
-    // each location splits by pinned-vector presence: clean files read
-    // plain, DV'd files read through the vector CURRENT AT PIN TIME
-    // (a vector grown since must not hide rows from the pinned view —
-    // it is a DIFFERENT, later-named file, so it can't: refs are
-    // immutable by name)
-    def rd(basePath: String, rels: Seq[String]): Seq[DataFrame] = {
-      val (dvd, clean) = rels.partition(pinnedDv.contains)
-      val parts = Seq.newBuilder[DataFrame]
-      if (clean.nonEmpty)
-        parts += inSchemaOrder(spark.read.schema(schema)
-          .option("basePath", basePath)
-          .parquet(clean.map(r => s"$basePath/$r"): _*), schema)
-      if (dvd.nonEmpty) {
-        val sel: Map[String, graft.functions.DvSel] = dvd.map(r =>
-          new Path(s"$basePath/$r").toUri.getPath ->
-            (graft.functions.ExcludeDv(
-              dvFilePath(table, pinnedDv(r).name))
-              : graft.functions.DvSel)).toMap
-        parts += inSchemaOrder(spark.read.schema(schema)
-          .option("basePath", basePath)
-          .parquet(dvd.map(r => s"$basePath/$r"): _*)
-          .filter(dvSelectCol(sel)), schema)
-      }
-      parts.result()
-    }
-    val parts =
-      (if (live.nonEmpty) rd(dir(table), live) else Seq.empty) ++
-      (if (retired.nonEmpty)
-        rd(retiredDir(table).toString, retired) else Seq.empty)
-    parts.reduce(_.unionByName(_))
-  }
-
-  /** The dv map snapshot `version` pinned (empty for pre-dv pins) —
-    * the `VERSION AS OF` SQL path's vector source. */
-  private[graft] def snapshotDvMap(table: String,
-                                   version: Long): Map[String, Dv.Ref] =
-    parseSnapshotDvMap(snapshotBody(table, version))
+  /** Read the table EXACTLY as of snapshot `version`: the fold of the
+    * pinned commit, read like `TIMESTAMP AS OF` ([[readAtCommit]]). A
+    * file no longer live resolves against the RETENTION area (files a
+    * retain-mode [[upsert]]/[[compact]] moved aside; partition values
+    * parse identically there because retirement preserves the
+    * table-relative path), and each file reads through the deletion
+    * vector current AT the pinned commit. Fails loudly if any file is
+    * in neither place (rewritten without retention, or
+    * [[vacuum]]-expired) — a partial corpus silently standing in for a
+    * pinned one is the failure mode this API exists to prevent. */
+  def readAt(table: String, version: Long): DataFrame =
+    readAtCommit(table, pinnedCommit(table, version), s"snapshot v$version")
 
   /** DV-aware scan over an explicit (absPath, bytes) entry set — the
     * SQL catalog's fallback plan for DV-bearing tables (its normal
@@ -5756,38 +5615,16 @@ class Lake(spark: SparkSession, val root: String) {
     readEntries(table,
       entries.map(e => (chainOfRel(e._1), e._1, e._2)), schema, dv)
 
-  /** Retention GC: keep the newest `keepLast` snapshot manifests,
-    * delete the older ones, then delete every RETIRED file that no
-    * kept manifest references. Live table files are never touched —
-    * vacuum only ever shrinks history, not the table. After a vacuum,
-    * [[readAt]] on an expired version fails with "no snapshot"; on a
-    * kept version it still reproduces the corpus bit-for-bit. The
-    * walk is driver-side over the retention listing (manifest-sized —
-    * the model-state rule), exactly how the published formats' expire
-    * + remove-orphans maintenance runs. */
-  /** `staleCommitMs`: snapshot-commit leftovers (`.lock` claims and
-    * manifest temp files from crashed writers) older than this are
-    * also swept — age-based because a FRESH lock may belong to an
-    * in-flight commit. Crashed claims otherwise burn their version
-    * number forever and accumulate junk in the snapshot dir. */
-  /** `sweepOrphans = true` additionally deletes LIVE-directory data
-    * files the current manifest does not name and that are older than
-    * `staleCommitMs` — the leftovers of a writer that crashed between
-    * landing and publishing (invisible to every manifest reader, but
-    * they cost storage and would resurface via [[refreshManifest]]).
-    * Opt-in because on a table a FOREIGN writer appends to behind the
-    * manifest's back, this would delete that writer's data — call
-    * [[refreshManifest]] first on such tables. */
   /** RESTORE the CURRENT table state to a pinned snapshot — the
     * published formats' `RESTORE TABLE … VERSION AS OF`, as one
-    * manifest transaction whose resulting file set IS the snapshot's:
+    * manifest transaction whose resulting file set IS the fold of the
+    * pinned commit:
     *
-    *  - snapshot files that were rewritten away move BACK from the
+    *  - pinned files that were rewritten away move BACK from the
     *    retention area into the table dir (paths are never reused, so
     *    the slot is free; a file still live stays put);
-    *  - current files the snapshot lacks RETIRE (retained — pins
-    *    taken after the restore's base state stay readable until
-    *    vacuum);
+    *  - current files the pin lacks RETIRE (retained — pins taken
+    *    after the restore's base state stay readable until vacuum);
     *  - the commit is DATA-CHANGING (`#op=restore`): CDC consumers
     *    see exactly the delete+insert diff the restore made (or its
     *    enriched update pairs), and the retained-commit vacuum pin
@@ -5799,13 +5636,13 @@ class Lake(spark: SparkSession, val root: String) {
     * under the commit lock, so a racing append simply lands on the
     * removed side). Returns (files un-retired, files retired).
     * Reference context: the reference engine re-pulls history to
-    * recover state (v3/helpers/data_update.py:29–59); the snapshot
-    * registry makes recovery a metadata transaction instead. */
+    * recover state (v3/helpers/data_update.py:29–59); a pin on the
+    * commit log makes recovery a metadata transaction instead. */
   def restoreTable(table: String, version: Long): (Int, Int) = {
-    val bodyR = snapshotBody(table, version) // loud when no snapshot
-    val rels = bodyR.filterNot(_.startsWith("#"))
-    val resolved = resolveLiveOrRetired(table, rels,
+    val pin = pinnedCommit(table, version) // loud when no snapshot
+    val resolved = entriesAtCommit(table, pin,
       s"restore to snapshot v$version")
+    val rels = resolved.map(e => relAnywhere(e._1))
     val byRel = rels.zip(resolved).toMap
     val targetSet = rels.toSet
     // the restored state's deletion vectors are the PINNED ones: a
@@ -5814,7 +5651,7 @@ class Lake(spark: SparkSession, val root: String) {
     // later rewrite dropped comes back with its file. Any concurrent
     // vector write between this plan and the commit is a loud
     // retryable conflict (dvExpected covers every restored file).
-    val pinnedDv = parseSnapshotDvMap(bodyR)
+    val pinnedDv = dvMapAtCommit(table, pin)
     val curDv = dvMapOf(table)
     val dvChangesR = pinnedDv.filter { case (rel, ref) =>
       !curDv.get(rel).contains(ref) }
@@ -5858,6 +5695,30 @@ class Lake(spark: SparkSession, val root: String) {
     (added.size, removedRels.size)
   }
 
+  /** Retention GC: keep the newest `keepLast` pins, delete the older
+    * ones, then delete every RETIRED file nothing still references.
+    * Live table files are never touched — vacuum only ever shrinks
+    * history, not the table. After a vacuum, [[readAt]] on an expired
+    * version fails with "no snapshot"; on a kept version it still
+    * reproduces the corpus bit-for-bit. Expiring a pin releases its
+    * hold on the commit log: the next checkpoint's retention cut may
+    * pass its commit ([[publishManifest]]). The walk is driver-side
+    * over the retention listing (manifest-sized — the model-state
+    * rule), exactly how the published formats' expire + remove-orphans
+    * maintenance runs.
+    *
+    * `staleCommitMs`: crashed-commit leftovers older than this are
+    * also swept — pin and manifest temp files, stale commit locks —
+    * age-based because a FRESH one may belong to an in-flight commit.
+    *
+    * `sweepOrphans = true` additionally deletes LIVE-directory data
+    * files the current manifest does not name and that are older than
+    * `staleCommitMs` — the leftovers of a writer that crashed between
+    * landing and publishing (invisible to every manifest reader, but
+    * they cost storage and would resurface via [[refreshManifest]]).
+    * Opt-in because on a table a FOREIGN writer appends to behind the
+    * manifest's back, this would delete that writer's data — call
+    * [[refreshManifest]] first on such tables. */
   def vacuum(table: String, keepLast: Int,
              staleCommitMs: Long = 3600000L,
              sweepOrphans: Boolean = false): VacuumStats = {
@@ -5884,14 +5745,15 @@ class Lake(spark: SparkSession, val root: String) {
         }
       }
     }
-    // CHECKED expiry: a manifest whose delete failed is still on disk
-    // and still readable, so it must keep pinning its retired files —
-    // counting it deleted would GC files a live-looking snapshot names
-    val reallyExpired = expired.filter(v =>
-      fs.delete(new Path(snapDir(table), f"v$v%09d.txt"), false))
-    val remaining = versions.filterNot(reallyExpired.toSet)
+    // CHECKED expiry: a pin whose delete failed is still on disk and
+    // still readable, so it keeps pinning its files (the pin set below
+    // re-lists the pins) and is not counted as expired
+    val reallyExpired = expired.filter(v => fs.delete(pinPath(table, v), false))
     // Two pin sources protect retired files from the GC below:
-    //  1. surviving SNAPSHOTS (pinned VERSION AS OF reads);
+    //  1. every surviving PIN's FULL folded file set (pinned VERSION AS
+    //     OF reads) — not only the changed sides of retained commits:
+    //     a rewrite-only commit after the pin replay-pins nothing
+    //     below, yet the pinned read still names its files;
     //  2. the RETAINED COMMIT LOG — every file a retained commit's
     //     change can reference (delta sides; checkpoint commits by
     //     fold diff). A CDC consumer lagging WITHIN the retained
@@ -5907,8 +5769,10 @@ class Lake(spark: SparkSession, val root: String) {
     //     missing-file manifestation is unreachable for streams.
     val keptRefs: Set[String] = {
       val b = Set.newBuilder[String]
-      remaining.foreach(v => b ++= manifestFiles(table, v))
       val (kinds, inc) = manifestState(table)
+      // pins hold the log, so each pinned commit is still retained
+      pinnedCommits(table, inc).distinct.filter(c => kinds.exists(_._1 == c))
+        .foreach(c => b ++= resolveManifest(table, inc, kinds, c).map(_._1))
       kinds.foreach { case (v, isDelta) =>
         // rewrite-only commits (compaction/clustering) are INVISIBLE
         // to the change feeds — changePlanBetween skips them — so
@@ -5945,22 +5809,14 @@ class Lake(spark: SparkSession, val root: String) {
       }
       b.result()
     }
-    // sweep crashed-commit leftovers: a lock whose version already
-    // committed is unambiguously stale; any other lock/tmp is stale
-    // once older than the in-flight window
+    // a crashed snapshot() leaves only its pin temp file, stale once
+    // older than the in-flight window
     if (fs.exists(snapDir(table))) {
       val now = System.currentTimeMillis()
-      val committed = remaining.toSet
       fs.listStatus(snapDir(table)).foreach { st =>
         val n = st.getPath.getName
-        val isLock = n.startsWith("v") && n.endsWith(".lock")
-        val isTmp = n.startsWith(".v") && n.contains("-tmp-")
-        val lockVer =
-          if (isLock) n.stripPrefix("v").stripSuffix(".lock").toLongOption
-          else None
-        val committedLock = lockVer.exists(committed)
-        if ((isLock || isTmp) &&
-            (committedLock || now - st.getModificationTime > staleCommitMs))
+        if (n.startsWith(".v") && n.contains("-tmp-") &&
+            now - st.getModificationTime > staleCommitMs)
           fs.delete(st.getPath, false)
       }
     }
@@ -6042,25 +5898,18 @@ class Lake(spark: SparkSession, val root: String) {
     }
     // ── deletion-vector GC ──
     // A vector file stays while ANY retained commit's dv map still
-    // references it (CDC replays read historical vectors) or ANY
-    // surviving snapshot pinned it (VERSION AS OF applies it); an
-    // unreferenced vector older than `staleCommitMs` sweeps — the age
-    // gate protects vectors staged by an in-flight write that hasn't
-    // published yet (they're unreferenced until their commit lands).
+    // references it — CDC replays read historical vectors, and every
+    // surviving pin's commit is retained (pins hold the log), so this
+    // also covers VERSION AS OF; an unreferenced vector older than
+    // `staleCommitMs` sweeps — the age gate protects vectors staged by
+    // an in-flight write that hasn't published yet (they're
+    // unreferenced until their commit lands).
     val dvd = dvDir(table)
     if (fs.exists(dvd)) {
       val (kindsV, incV) = manifestState(table)
-      val pinnedDvNames: Set[String] = {
-        val b = Set.newBuilder[String]
-        kindsV.foreach { case (v, _) =>
-          resolveDvMap(table, incV, kindsV, v, cache = false)
-            .values.foreach(r => b += r.name)
-        }
-        remaining.foreach(v =>
-          parseSnapshotDvMap(snapshotBody(table, v))
-            .values.foreach(r => b += r.name))
-        b.result()
-      }
+      val pinnedDvNames: Set[String] = kindsV.flatMap { case (v, _) =>
+        resolveDvMap(table, incV, kindsV, v, cache = false).values.map(_.name)
+      }.toSet
       val now = System.currentTimeMillis()
       fs.listStatus(dvd).foreach { st =>
         if (st.isFile && !pinnedDvNames(st.getPath.getName) &&

@@ -8,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[graft.fs.FastLocalFs]]), so the full suite validates the
   * filesystem the bench and verify paths actually use. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = graft.fs.FastLocalFs.configure(
-    SparkSession.builder())
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def relClose(got: Double, exp: Double, tol: Double = 1e-9): Boolean =
     if (exp == 0.0) math.abs(got) < tol

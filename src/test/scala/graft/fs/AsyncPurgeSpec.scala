@@ -31,6 +31,29 @@ class AsyncPurgeSpec extends AnyFunSuite with graft.SparkSpec {
     assert(!java.nio.file.Files.exists(base))
   }
 
+  test("drain waits for a task the worker dequeued and is still running") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val running = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    @volatile var finished = false
+    AsyncPurge.submit(() => {
+      running.countDown()
+      release.await(30, TimeUnit.SECONDS)
+      finished = true
+    })
+    // the worker holds the task: the queue is empty from here on
+    assert(running.await(10, TimeUnit.SECONDS), "worker never ran the task")
+    val drained = new CountDownLatch(1)
+    val drainer = new Thread(() => { AsyncPurge.drain(20000L); drained.countDown() })
+    drainer.start()
+    assert(!drained.await(300, TimeUnit.MILLISECONDS),
+      "drain returned while the worker was still running a dequeued task")
+    release.countDown()
+    assert(drained.await(10, TimeUnit.SECONDS), "drain never returned")
+    assert(finished, "drain returned before the in-flight task finished")
+    drainer.join()
+  }
+
   test("dropTable: paths gone on return, recreate clean, trash purged") {
     import graft.v3.{Lake, Schemas}
     val root = java.nio.file.Files.createTempDirectory("droplake").toString

@@ -123,6 +123,19 @@ class FastLocalFsSpec extends AnyFunSuite {
     assert(fl.isSymlink && sl.isSymlink)
     assert(fl.getSymlink.toString == sl.getSymlink.toString)
     assert(fl.getLen == sl.getLen && fl.getLen == 3L)
+    // symlink to a DIRECTORY: a link status, not the followed one — the
+    // stock path reports isDirectory = false for every symlink, so the
+    // fast path must too (a FileContext rename then moves the link,
+    // never the tree behind it)
+    val sub = Files.createDirectory(Paths.get(s"$dir/sub"))
+    val dlink = Paths.get(s"$dir/dlink")
+    Files.createSymbolicLink(dlink, sub)
+    val fdl = fastRaw.getFileLinkStatus(new Path(dlink.toString))
+    val sdl = stock.getFileLinkStatus(new Path(dlink.toString))
+    assert(fdl.isSymlink && sdl.isSymlink)
+    assert(fdl.isDirectory == sdl.isDirectory && !fdl.isDirectory)
+    assert(fdl.getLen == sdl.getLen)
+    assert(fdl.getSymlink.toString == sdl.getSymlink.toString)
     // dangling symlink: synthetic zero status, target still recorded
     val dang = Paths.get(s"$dir/dangling")
     Files.createSymbolicLink(dang, Paths.get(s"$dir/nowhere"))

@@ -191,20 +191,21 @@ class LakeChangesSpec extends SparkSpec {
       e.getMessage.contains("retention"), s"wrong refusal: ${e.getMessage}")
   }
 
-  test("anchored snapshots refuse a diff whose commit range retention expired (hidden rewrite)") {
+  test("a pin holds its compaction in the log: the diff refuses through the churn guard") {
     val root = Files.createTempDirectory("lake-cdc5").toString
     val lake = new Lake(spark, root)
-    // tight floor so the rewrite commit actually expires
+    // tight floor: without the pin, the rewrite commit would expire
     lake.setTableProperties(Schemas.Nfp,
       Map("manifest.minRetainedCommits" -> "8"))
     (0 until 3).foreach(j =>
       lake.append(rows(j * 10 until (j + 1) * 10).coalesce(1), Schemas.Nfp))
     val v1 = lake.snapshot(Schemas.Nfp)
+    val c1 = lake.latestCommitVersion(Schemas.Nfp).get
     // a RETAINED compaction: both snapshot sides stay resolvable from
-    // the retention area even after the commit log forgets the rewrite
+    // the retention area
     assert(lake.compact(Schemas.Nfp, targetBytes = 1L << 26,
       retain = true) > 0)
-    // roll the log until the compaction commit expires
+    // roll the log well past the floor
     val cur = new Lake(spark, root)
     (0 until 40).foreach { _ =>
       val inv = cur.fileInventory(Schemas.Nfp)
@@ -213,15 +214,14 @@ class LakeChangesSpec extends SparkSpec {
         delta = Some((Seq.empty, Set.empty[String])))
     }
     val v2 = cur.snapshot(Schemas.Nfp)
-    // without the anchors this diff SILENTLY emitted all 30 unchanged
-    // rows as delete+insert pairs (the retained-log churn guard could
-    // not see the expired rewrite); anchored snapshots prove the gap
-    // and refuse
+    // the pin kept the compaction commit in the log, so the churn
+    // guard sees the rewrite: the diff refuses instead of emitting all
+    // 30 unchanged rows as delete+insert pairs
+    assert(cur.commitHistory(Schemas.Nfp).head._1 <= c1)
     val e = intercept[IllegalArgumentException] {
       cur.tableChanges(Schemas.Nfp, v1, v2).count()
     }
-    assert(e.getMessage.contains("expired by manifest retention"),
-      e.getMessage)
+    assert(e.getMessage.contains("compaction/clustering"), e.getMessage)
   }
 
   test("changesBetweenCommits with expectedIncarnation refuses after dropTable+recreate") {

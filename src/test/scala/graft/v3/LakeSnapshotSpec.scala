@@ -4,10 +4,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Manifest-based time travel: a snapshot pins the exact file set, a
-  * pinned read reproduces it bit-for-bit while appends keep landing,
-  * and an invalidated snapshot (compaction rewrote its files) fails
-  * loudly instead of returning a partial corpus. */
+/** Time travel by pins on the commit log: a snapshot pins a manifest
+  * commit, a pinned read reproduces its file set bit-for-bit while
+  * appends keep landing, the pin holds the log until vacuum expires
+  * it, and an invalidated snapshot (compaction rewrote its files
+  * without retention) fails loudly instead of returning a partial
+  * corpus. */
 class LakeSnapshotSpec extends SparkSpec {
 
   private def rows(from: Int, until: Int) = {
@@ -143,47 +145,94 @@ class LakeSnapshotSpec extends SparkSpec {
     assert(lake.readAt(Schemas.Nfp, v2).count() == 60L)
   }
 
-  test("commit race: claimed and committed versions are skipped, " +
-      "a half-committed version is never readable") {
+  test("commit race: committed versions are skipped, a half-written " +
+      "or anchorless pin is never readable") {
     val lake = new Lake(spark,
       Files.createTempDirectory("lake-snap4").toString)
     lake.append(rows(0, 10), Schemas.Nfp)
     val v1 = lake.snapshot(Schemas.Nfp)
     assert(v1 == 1L)
-    // simulate a concurrent writer that claimed v2 and crashed before
-    // landing its manifest (stale .lock, body still in a .tmp file):
-    // the next snapshot must SKIP v2, and v2 must never read back as
-    // a (possibly torn) snapshot
+    // a writer that crashed mid-pin leaves only its temp file (the body
+    // never reached the final name): v2 must not read back as a
+    // (possibly torn) snapshot
     val snapDir = new java.io.File(
       lake.root, s"_snapshots/${Schemas.Nfp}")
-    assert(new java.io.File(snapDir, f"v${2L}%09d.lock").createNewFile())
     java.nio.file.Files.write(
       new java.io.File(snapDir, f".v${2L}%09d-tmp-123").toPath,
       "partial/garbage".getBytes("UTF-8"))
-    val v3 = lake.snapshot(Schemas.Nfp)
-    assert(v3 == 3L, s"expected the crashed claim's number skipped, got $v3")
-    assert(lake.snapshotVersions(Schemas.Nfp) == Seq(1L, 3L))
     val e = intercept[IllegalArgumentException](
       lake.readAt(Schemas.Nfp, 2L))
     assert(e.getMessage.contains("no snapshot"))
-    // both survivors read clean
-    assert(lake.readAt(Schemas.Nfp, v1).count() == 10L)
-    assert(lake.readAt(Schemas.Nfp, v3).count() == 10L)
-    // a fully COMMITTED version by another writer is also skipped,
-    // never overwritten: plant v4 with known content, snapshot -> v5
+    // the number was never committed: the next pin takes it
+    assert(lake.snapshot(Schemas.Nfp) == 2L)
+    val v3 = lake.snapshot(Schemas.Nfp)
+    assert(v3 == 3L)
+    Seq(v1, 2L, v3).foreach(v => assert(lake.readAt(Schemas.Nfp, v).count() == 10L))
+    // a COMMITTED pin by another writer is skipped, never overwritten;
+    // planted empty, it carries no commit anchor and refuses loudly
     val vf = new java.io.File(snapDir, f"v${4L}%09d.txt")
     java.nio.file.Files.write(vf.toPath, Array.empty[Byte])
     val v5 = lake.snapshot(Schemas.Nfp)
     assert(v5 == 5L)
-    assert(lake.readAt(Schemas.Nfp, 4L).count() == 0L,
-      "foreign committed manifest was not preserved verbatim")
-    // vacuum sweeps the crashed writer's leftovers (age-based: 0 ms
-    // marks everything stale) without touching committed manifests
+    assert(vf.length() == 0L, "foreign committed pin was not preserved verbatim")
+    val e4 = intercept[IllegalArgumentException](
+      lake.readAt(Schemas.Nfp, 4L))
+    assert(e4.getMessage.contains("no snapshot"), e4.getMessage)
+    // vacuum sweeps the crashed writer's temp (age-based: 0 ms marks
+    // everything stale) without touching committed pins
     lake.vacuum(Schemas.Nfp, keepLast = 10, staleCommitMs = 0L)
     val left = Option(snapDir.listFiles()).toSeq.flatten.map(_.getName)
-    assert(!left.exists(n => n.endsWith(".lock") || n.contains("-tmp-")),
+    assert(!left.exists(_.contains("-tmp-")),
       s"stale commit leftovers survived vacuum: $left")
-    assert(lake.snapshotVersions(Schemas.Nfp) == Seq(1L, 3L, 4L, 5L))
+    assert(lake.snapshotVersions(Schemas.Nfp) == Seq(1L, 2L, 3L, 4L, 5L))
+  }
+
+  test("a pin holds the log through compaction, vacuum and 24 commits; " +
+      "once expired, the next checkpoint cuts past it") {
+    val root = Files.createTempDirectory("lake-snap-hold").toString
+    val lake = new Lake(spark, root)
+    spark.conf.set("spark.sql.catalog.snap_hold",
+      classOf[graft.sources.LakeCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snap_hold.root", root)
+    // the tightest floor: only the pin keeps old commits alive
+    lake.setTableProperties(Schemas.Nfp,
+      Map("manifest.minRetainedCommits" -> "1"))
+    (0 until 3).foreach(j =>
+      lake.append(rows(j * 10, (j + 1) * 10).coalesce(1), Schemas.Nfp))
+    // two metadata-only checkpoints cut the log past the appends, so
+    // after the rewrite-only compaction below only the pin's own fold
+    // keeps the original files from vacuum
+    (0 until 2).foreach(_ => lake.refreshManifest(Schemas.Nfp))
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select("transaction_hash").collect().map(_.getString(0)).toSet
+    val want = (0 until 30).map(i => s"0xtx$i").toSet
+    val pin = lake.snapshot(Schemas.Nfp)
+    val pinCommit = lake.latestCommitVersion(Schemas.Nfp).get
+    assert(lake.compact(Schemas.Nfp, targetBytes = 1L << 30,
+      retain = true) >= 1)
+    assert(lake.vacuum(Schemas.Nfp, keepLast = 1).manifestsDeleted == 0)
+    (0 until 24).foreach(i =>
+      lake.append(rows(100 + i, 101 + i).coalesce(1), Schemas.Nfp))
+    val history = lake.commitHistory(Schemas.Nfp)
+    assert(history.exists { case (v, _, _, d) => !d && v > pinCommit + 1 },
+      s"no checkpoint was published after the pin: $history")
+    assert(history.head._1 <= pinCommit,
+      s"retention cut past the live pin's commit v$pinCommit: $history")
+    assert(keys(lake.readAt(Schemas.Nfp, pin)) == want)
+    assert(keys(spark.sql(
+      s"SELECT transaction_hash FROM snap_hold.${Schemas.Nfp} " +
+        s"VERSION AS OF $pin")) == want)
+    lake.restoreTable(Schemas.Nfp, pin)
+    assert(keys(lake.read(Schemas.Nfp)) == want)
+    // expire the pin: the next checkpoint may cut past its commit
+    assert(lake.vacuum(Schemas.Nfp, keepLast = 0).manifestsDeleted == 1)
+    lake.refreshManifest(Schemas.Nfp)
+    lake.refreshManifest(Schemas.Nfp)
+    val after = lake.commitHistory(Schemas.Nfp).map(_._1)
+    assert(after.head > pinCommit,
+      s"the log still holds expired pin v$pin's commit: $after")
+    val e = intercept[IllegalArgumentException](lake.readAt(Schemas.Nfp, pin))
+    assert(e.getMessage.contains("no snapshot"), e.getMessage)
   }
 
   test("version numbers are never reused after vacuum - stale handles fail loudly") {

@@ -332,14 +332,19 @@ class LakeUpsertSpec extends SparkSpec {
     val vs = lake.vacuum(Schemas.Nfp, keepLast = 1)
     assert(vs.filesDeleted == 0 && vs.manifestsDeleted == 0)
     assert(lake.readAt(Schemas.Nfp, v1).count() == 40L)
-    // dropping retention AND rolling the CDC window (the appends that
-    // added the compacted-away originals must expire too — r16
-    // lifecycle): vacuum then frees all four
+    // expiring the pin releases its hold on the commit log, but frees
+    // nothing yet: the appends that added the compacted-away originals
+    // are still retained (r16 lifecycle)
+    val vs1 = lake.vacuum(Schemas.Nfp, keepLast = 0)
+    assert(vs1.manifestsDeleted == 1 && vs1.filesDeleted == 0,
+      s"unexpected vacuum stats: $vs1")
+    // rolling the CDC window now cuts past those appends: vacuum then
+    // frees all four
     lake.setTableProperties(Schemas.Nfp,
       Map("manifest.minRetainedCommits" -> "1"))
     (0 until 3).foreach(_ => lake.refreshManifest(Schemas.Nfp))
     val vs2 = lake.vacuum(Schemas.Nfp, keepLast = 0)
-    assert(vs2.manifestsDeleted == 1 && vs2.filesDeleted == 4,
+    assert(vs2.manifestsDeleted == 0 && vs2.filesDeleted == 4,
       s"unexpected vacuum stats: $vs2")
   }
 

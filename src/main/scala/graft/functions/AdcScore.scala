@@ -110,8 +110,7 @@ object AdcScore {
   /** Idempotently register in the session's function registry (the
     * Spark-4-clean Column-from-Expression path, as [[VectorFunctions]]). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => AdcScore(exprs(0), exprs(1)), "built-in")
+    NativeFunctions.register(spark, Name)
 
   /** adc(codes, luts) = Σ_s luts[s][codes[s]] — codegen'd LUT sum. */
   def of(codes: Column, luts: Column): Column =

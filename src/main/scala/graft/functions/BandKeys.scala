@@ -84,8 +84,7 @@ object BandKeysExpr {
     * literal (one plan object however many planes), rowsPerBand as an
     * int literal. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => fromExprs(exprs), "built-in")
+    NativeFunctions.register(spark, Name)
 
   private[graft] def fromExprs(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3, "band_keys(emb, planes, rowsPerBand)")

@@ -82,8 +82,7 @@ object BloomMightContainExpr {
   val Name = "graft_bloom_might_contain"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => BloomMightContainExpr(exprs(0), exprs(1)), "built-in")
+    NativeFunctions.register(spark, Name)
 
   /** Column form over an already-built filter. */
   def of(key: Column, filter: BloomFilter): Column = {

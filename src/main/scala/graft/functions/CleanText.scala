@@ -124,8 +124,7 @@ object CleanTextExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => CleanTextExpr(exprs.head), "built-in")
+    NativeFunctions.register(spark, Name)
 
   def of(c: Column): Column = call_function(Name, c)
 }

@@ -117,8 +117,7 @@ object HllAgg {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => HllAgg(exprs.head).toAggregateExpression(), "built-in")
+    NativeFunctions.register(spark, Name)
 
   /** Aggregate a column of non-negative 60-bit hashes into the m = 64
     * register array. */

@@ -68,8 +68,7 @@ object Log2FixedExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => Log2FixedExpr(exprs.head), "built-in")
+    NativeFunctions.register(spark, Name)
 
   def of(c: Column): Column = call_function(Name, c)
 }

@@ -64,8 +64,7 @@ object Md5Hash64Expr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => Md5Hash64Expr(exprs.head), "built-in")
+    NativeFunctions.register(spark, Name)
 
   def of(c: Column): Column = call_function(Name, c)
 }

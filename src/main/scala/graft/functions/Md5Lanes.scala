@@ -61,8 +61,7 @@ object Md5LanesExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => Md5LanesExpr(exprs.head), "built-in")
+    NativeFunctions.register(spark, Name)
 
   def of(c: Column): Column = call_function(Name, c)
 }

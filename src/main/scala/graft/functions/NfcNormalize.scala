@@ -52,8 +52,7 @@ object NfcNormalizeExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => NfcNormalizeExpr(exprs.head), "built-in")
+    NativeFunctions.register(spark, Name)
 
   def of(c: Column): Column = call_function(Name, c)
 }

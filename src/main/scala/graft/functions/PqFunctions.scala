@@ -246,12 +246,8 @@ object PqFunctions {
   val CodesName = "graft_pq_codes"
   val LutsName = "graft_pq_luts"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CodesName, exprs => PqCodesExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      LutsName, exprs => PqLutsExpr(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, CodesName, LutsName)
 
   def codes(emb: Column, cbs: Column): Column =
     call_function(CodesName, emb, cbs)

@@ -56,8 +56,7 @@ object SearchSortedExpr {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => SearchSortedExpr(exprs(0), exprs(1)), "built-in")
+    NativeFunctions.register(spark, Name)
 
   def of(sortedArr: Column, value: Column): Column =
     call_function(Name, sortedArr, value)

@@ -76,8 +76,7 @@ object SimhashAgg {
   val Name = "graft_simhash_agg"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => SimhashAgg(exprs.head).toAggregateExpression(), "built-in")
+    NativeFunctions.register(spark, Name)
 
   /** Aggregate a column of 64-bit shingle hashes into a simhash. */
   def simhashOf(hash: Column): Column = call_function(Name, hash)

@@ -69,8 +69,7 @@ object VectorFunctions {
     * registry (the Spark-4-clean way to build a Column from a custom
     * Expression without private APIs). */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName, exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+    NativeFunctions.register(spark, DotName)
 
   /** dot(a, b) over array<double> columns — codegen'd tight loop. */
   def dot(a: Column, b: Column): Column = call_function(DotName, a, b)

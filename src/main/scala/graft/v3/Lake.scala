@@ -1845,7 +1845,8 @@ class Lake(spark: SparkSession, val root: String) {
       return None
     val base = fs.makeQualified(new Path(dir(table))).toString
     try Some(range.map { w =>
-      val (added, removedRel) = readDelta(table, w)
+      val (added, removedRel) =
+        commitSides(table, kinds, inc, w, isDelta = true).get
       (added.map { case (rel, b) => (s"$base/$rel", b) },
         removedRel.map(r => s"$base/$r"))
     })
@@ -1987,12 +1988,17 @@ class Lake(spark: SparkSession, val root: String) {
     * row of a file it added as `'insert'` (an update is its
     * delete+insert pair, exactly how the published formats
     * reconstruct changes when no per-row change log was written).
-    * Each side is the fold of its pin's commit; both resolve
-    * live-or-retired, so a retain-mode
-    * upsert/compact keeps the delta replayable until [[vacuum]];
-    * missing files fail loudly ([[resolveLiveOrRetired]]). The diff
-    * itself is a manifest set-difference — zero listings, O(files)
-    * driver work only for the CHANGED files. Downstream incremental
+    * Each side is the fold of its pin's commit, read through that
+    * pin's deletion vectors (a row already deleted at pin time is not
+    * part of the diff); a file in both snapshots whose vector changed
+    * contributes only its position diff (newly-deleted rows as
+    * deletes, restored rows as inserts) — the same change builder as
+    * the commit-grain feed ([[changeFiles]]). Files resolve
+    * live-or-retired, so a retain-mode upsert/compact keeps the delta
+    * replayable until [[vacuum]]; missing files fail loudly
+    * ([[resolveLiveOrRetired]]). The diff itself is a manifest
+    * set-difference — zero listings, O(files) driver work only for the
+    * CHANGED files. Downstream incremental
     * consumers join deletes against their state by key; pure-append
     * history yields inserts only ([[readSince]] is the cheaper
     * special case). */
@@ -2044,51 +2050,67 @@ class Lake(spark: SparkSession, val root: String) {
         "(the commit-grain feed excludes rewrites), or snapshot on " +
         "either side of maintenance: " + churned.take(3).mkString(", "))
     val schema = effectiveSchema(table)
-    // each side reads through ITS snapshot's pinned deletion vectors
-    // (a row already deleted at pin time is not part of the diff),
-    // and files common to both snapshots whose VECTOR changed emit
-    // the position-diff rows — the merge-on-read delete's snapshot
-    // diff, which a bare file-set diff cannot see
-    val dvFrom = resolveDvMap(table, inc, kinds, cFrom)
-    val dvTo = resolveDvMap(table, inc, kinds, cTo)
-    def files(rels: Seq[String], dvPin: Map[String, Dv.Ref],
-              include: Map[String, Array[Long]] = Map.empty)
-        : Seq[ChangeFile] =
-      resolveLiveOrRetired(table, rels.sorted,
-        s"table_changes($fromVersion, $toVersion)")
-        .map { case (p, b) =>
-          val rel = relAnywhere(p)
-          include.get(rel) match {
-            case Some(ps) => ChangeFile(chainOfRel(p), p, b,
-              include = Some(ps))
-            case None => ChangeFile(chainOfRel(p), p, b,
-              exclude = dvPin.get(rel))
-          }
-        }
+    val (delFiles, insFiles) = changeFiles(table,
+      (from -- to).toSeq, (to -- from).toSeq,
+      resolveDvMap(table, inc, kinds, cFrom),
+      resolveDvMap(table, inc, kinds, cTo),
+      s"table_changes($fromVersion, $toVersion)")
     def side(fs0: Seq[ChangeFile], kind: String): DataFrame =
       readChangeFiles(table, fs0, schema)
         .withColumn("_change_type", lit(kind))
-    val common = (from & to).toSeq
-    val grown = common.flatMap { rel =>
-      if (dvFrom.get(rel) == dvTo.get(rel)) None
-      else {
-        val cur = dvTo.get(rel).map(dvPositions(table, _))
-          .getOrElse(Array.empty[Long])
-        val prev = dvFrom.get(rel).map(dvPositions(table, _))
-          .getOrElse(Array.empty[Long])
-        Some((rel, Dv.minus(cur, prev), Dv.minus(prev, cur)))
-      }
-    }
-    val delFiles = files((from -- to).toSeq, dvFrom) ++
-      files(grown.collect { case (r, d, _) if d.nonEmpty => r },
-        dvFrom, grown.collect { case (r, d, _) if d.nonEmpty =>
-          (r, d) }.toMap)
-    val insFiles = files((to -- from).toSeq, dvTo) ++
-      files(grown.collect { case (r, _, u) if u.nonEmpty => r },
-        dvTo, grown.collect { case (r, _, u) if u.nonEmpty =>
-          (r, u) }.toMap)
     side(delFiles, "delete").unionByName(side(insFiles, "insert"))
   }
+
+  /** The delete and insert sides of one change, as scan-ready
+    * [[ChangeFile]]s: `removed` files read through the vector they
+    * carried BEFORE (`dvFrom` — a row already deleted is not deleted
+    * again), `added` files through the vector they carry AFTER
+    * (`dvTo`), and every SURVIVING file whose vector changed emits
+    * its position diffs — newly-deleted rows as deletes,
+    * restore-resurrected rows as inserts (the merge-on-read delete's
+    * change, which a bare file-set diff cannot see). Every file
+    * resolves live-or-retired, loud under `what` when one is gone
+    * ([[resolveLiveOrRetired]]). The one change builder behind the
+    * commit-grain plan ([[changePlanBetween]]) and the snapshot diff
+    * ([[tableChanges]]); `#dvs` heads make the vector legs free for
+    * dv-less history (both maps resolve empty without body reads). */
+  private def changeFiles(table: String, removed: Seq[String],
+      added: Seq[String], dvFrom: Map[String, Dv.Ref],
+      dvTo: Map[String, Dv.Ref], what: String)
+      : (Seq[ChangeFile], Seq[ChangeFile]) = {
+    def positions(ref: Option[Dv.Ref]): Array[Long] =
+      ref.map(dvPositions(table, _)).getOrElse(Array.empty[Long])
+    val diffs = dvChangedRels(dvFrom, dvTo, removed.toSet ++ added)
+      .toSeq.map { rel =>
+        val prev = positions(dvFrom.get(rel))
+        val cur = positions(dvTo.get(rel))
+        (rel, Dv.minus(cur, prev), Dv.minus(prev, cur))
+      }
+    def resolved(rels: Iterable[String])(
+        mk: (String, String, Long) => ChangeFile): Seq[ChangeFile] =
+      resolveLiveOrRetired(table, rels.toSeq.sorted, what)
+        .map { case (p, b) => mk(relAnywhere(p), p, b) }
+    def whole(rels: Seq[String], dv: Map[String, Dv.Ref]) =
+      resolved(rels)((rel, p, b) =>
+        ChangeFile(chainOfRel(p), p, b, exclude = dv.get(rel)))
+    def diff(ps: Map[String, Array[Long]]) =
+      resolved(ps.keys)((rel, p, b) =>
+        ChangeFile(chainOfRel(p), p, b, include = Some(ps(rel))))
+    (whole(removed, dvFrom) ++
+      diff(diffs.collect { case (r, d, _) if d.nonEmpty => r -> d }.toMap),
+      whole(added, dvTo) ++
+        diff(diffs.collect { case (r, _, u) if u.nonEmpty => r -> u }.toMap))
+  }
+
+  /** Files outside a change's `sides` whose deletion vector differs
+    * between two dv maps — what [[changeFiles]] emits position diffs
+    * for, and so what [[vacuum]] must keep replayable. A vector only
+    * names a file of its own commit's set, so these are the files
+    * present on both sides. */
+  private def dvChangedRels(dvFrom: Map[String, Dv.Ref],
+      dvTo: Map[String, Dv.Ref], sides: Set[String]): Set[String] =
+    (dvFrom.keySet ++ dvTo.keySet).filter(r =>
+      !sides(r) && dvFrom.get(r) != dvTo.get(r))
 
   /** Table-relative paths swapped by RETAINED rewrite-only commits,
     * split by side: (what rewrites REMOVED, what they ADDED) —
@@ -2097,11 +2119,13 @@ class Lake(spark: SparkSession, val root: String) {
     * the commits wholesale. Walks the CALLER's `kinds` listing (the
     * guard validated its range against the same one — a second
     * listing here would race a retention cut into a silent gap).
-    * O(retained commits) cached header reads; delta bodies are read
-    * only for rewrite commits. A version deleted by a concurrent
-    * retention cut MID-WALK refuses loudly — skipping it would hide
-    * a rewrite from the churn guard, and treating it as header-less
-    * would do the same silently. */
+    * O(retained commits) cached header reads; sides
+    * ([[commitSides]]) are read only for rewrite commits. A version
+    * deleted by a concurrent retention cut MID-WALK refuses loudly —
+    * skipping it would hide a rewrite from the churn guard, and
+    * treating it as header-less would do the same silently. A
+    * checkpoint whose base already left the log is passed over: it
+    * precedes every commit the guard can fold, so no diff spans it. */
   private def rewriteSwappedRels(table: String,
       kinds: Seq[(Long, Boolean)], inc: String, what: String)
       : (Set[String], Set[String]) = {
@@ -2110,16 +2134,10 @@ class Lake(spark: SparkSession, val root: String) {
     kinds.foreach { case (v, isDelta) =>
       try {
         if (rewriteOps(
-            commitHeaderOf(table, inc, v, isDelta, strict = true)._2)) {
-          if (isDelta) {
-            val (added, removed) = readDelta(table, v)
-            ad ++= added.map(_._1); rm ++= removed
-          } else if (kinds.exists(_._1 == v - 1)) {
-            val prev = resolveManifest(table, inc, kinds, v - 1).map(_._1).toSet
-            val cur = resolveManifest(table, inc, kinds, v).map(_._1).toSet
-            rm ++= (prev -- cur); ad ++= (cur -- prev)
-          } // else: base expired - nothing diffable survives either
-        }
+            commitHeaderOf(table, inc, v, isDelta, strict = true)._2))
+          commitSides(table, kinds, inc, v, isDelta).foreach {
+            case (added, removed) => ad ++= added.map(_._1); rm ++= removed
+          }
       } catch {
         case _: java.io.FileNotFoundException =>
           throw new IllegalArgumentException(
@@ -2136,7 +2154,14 @@ class Lake(spark: SparkSession, val root: String) {
     * added files as `'insert'` rows, tagged with the committing
     * `_commit_version` — the change feed a downstream incremental
     * consumer (and the streaming CDC source,
-    * [[graft.streaming.LakeChangeSource]]) replays in order.
+    * [[graft.streaming.LakeChangeSource]]) replays in order. A commit's
+    * files are its [[commitSides]] (a checkpoint's are the fold diff
+    * against the version before it); removed files read through the
+    * deletion vectors before the commit, added ones through those
+    * after it, and a file whose vector the commit changed emits only
+    * that position diff ([[changeFiles]]) — so a merge-on-read DELETE
+    * surfaces exactly its deleted rows, a restore that rolls a vector
+    * back exactly the revived ones.
     *
     * Unlike the snapshot diff ([[tableChanges]]) this feed is
     * rewrite-aware: commits whose `#op=` header marks a
@@ -2145,7 +2170,8 @@ class Lake(spark: SparkSession, val root: String) {
     * file swaps carry no row changes. Files resolve live-or-retired,
     * so retain-mode rewrites keep history replayable until [[vacuum]];
     * a commit version expired by manifest retention, or a file
-    * rewritten without retention, refuses loudly — a change feed that
+    * rewritten without retention, refuses loudly ([[vacuum]] keeps
+    * every file a retained commit's replay reads) — a change feed that
     * silently skips history corrupts every consumer joining deletes by
     * key. Version numbers are PER-INCARNATION: a consumer storing
     * versions across runs should also store [[currentIncarnation]]
@@ -2358,90 +2384,36 @@ class Lake(spark: SparkSession, val root: String) {
         s"commit version(s) ${missing.take(5).mkString(", ")} expired by " +
         "manifest retention - that history is gone; restart the change " +
         "feed from a current snapshot of the table")
+    val what = s"changesBetweenCommits($fromVersion, $toVersion)"
     wanted.flatMap { v =>
       val isDelta = kinds.find(_._1 == v).exists(_._2)
       // STRICT header read: a version expired by a concurrent
       // retention cut mid-plan must refuse loudly — read as
       // header-less it would be misclassified as data-changing, and a
       // cached fold could then emit the rewrite's file swap as
-      // delete+insert churn
-      val op = try commitHeaderOf(table, inc, v, isDelta, strict = true)._2
-      catch {
+      // delete+insert churn. Its sides refuse the same way.
+      val sides = try {
+        if (rewriteOps(
+            commitHeaderOf(table, inc, v, isDelta, strict = true)._2)) None
+        else Some(commitSides(table, kinds, inc, v, isDelta).getOrElse(
+          throw new IllegalArgumentException(
+            s"$what of $table: v${v - 1} (the base of checkpoint v$v) " +
+              "expired by manifest retention - restart the change feed " +
+              "from a current snapshot")))
+      } catch {
         case _: java.io.FileNotFoundException =>
           throw new IllegalArgumentException(
-            s"changesBetweenCommits($fromVersion, $toVersion) of " +
-              s"$table: commit v$v was expired by a concurrent " +
+            s"$what of $table: commit v$v was expired by a concurrent " +
               "retention cut mid-read - retry from a current snapshot")
       }
-      if (rewriteOps(op)) Seq.empty
-      else {
-        val (added, removed): (Seq[String], Seq[String]) =
-          if (isDelta) {
-            val (a, r) = readDelta(table, v)
-            (a.map(_._1), r.toSeq)
-          } else {
-            // a checkpoint commit carries the FULL set; its change is
-            // the diff against the previous version's fold
-            require(v == 1 || kinds.exists(_._1 == v - 1),
-              s"changesBetweenCommits($fromVersion, $toVersion) of " +
-                s"$table: v${v - 1} (the base of checkpoint v$v) expired " +
-                "by manifest retention - restart the change feed from a " +
-                "current snapshot")
-            val prev = if (v == 1) Set.empty[String]
-              else resolveManifest(table, inc, kinds, v - 1).map(_._1).toSet
-            val cur = resolveManifest(table, inc, kinds, v).map(_._1).toSet
-            ((cur -- prev).toSeq, (prev -- cur).toSeq)
-          }
-        // deletion-vector state around the commit: a removed file's
-        // rows read through the vector it carried BEFORE the commit
-        // (already-deleted rows must not re-emit as deletes); a
-        // surviving file whose vector CHANGED emits its position
-        // diffs — newly-deleted rows as deletes, restore-resurrected
-        // rows as inserts. `#dvs` heads make this free for dv-less
-        // history (both maps resolve empty without body reads).
-        val dvPrev = if (v == 1) Map.empty[String, Dv.Ref]
-          else resolveDvMap(table, inc, kinds, v - 1)
-        val dvCur = resolveDvMap(table, inc, kinds, v)
-        val addedSet = added.toSet
-        val removedSet = removed.toSet
-        val grown = (dvPrev.keySet ++ dvCur.keySet).toSeq.sorted
-          .filterNot(r => addedSet(r) || removedSet(r))
-          .flatMap { rel =>
-            if (dvPrev.get(rel) == dvCur.get(rel)) None
-            else {
-              val cur = dvCur.get(rel).map(dvPositions(table, _))
-                .getOrElse(Array.empty[Long])
-              val prev = dvPrev.get(rel).map(dvPositions(table, _))
-                .getOrElse(Array.empty[Long])
-              Some((rel, Dv.minus(cur, prev), Dv.minus(prev, cur)))
-            }
-          }
-        def files(rels: Seq[String], dvPin: Map[String, Dv.Ref],
-                  include: Map[String, Array[Long]] = Map.empty)
-            : Seq[ChangeFile] =
-          resolveLiveOrRetired(table, rels.sorted,
-            s"changesBetweenCommits($fromVersion, $toVersion)")
-            .map { case (p, b) =>
-              val rel = relAnywhere(p)
-              include.get(rel) match {
-                case Some(ps) => ChangeFile(chainOfRel(p), p, b,
-                  include = Some(ps))
-                case None => ChangeFile(chainOfRel(p), p, b,
-                  exclude = dvPin.get(rel))
-              }
-            }
-        val delFiles = files(removed, dvPrev) ++
-          files(grown.collect { case (r, d, _) if d.nonEmpty => r },
-            dvPrev, grown.collect { case (r, d, _) if d.nonEmpty =>
-              (r, d) }.toMap)
-        val insFiles = files(added, dvCur) ++
-          files(grown.collect { case (r, _, u) if u.nonEmpty => r },
-            dvCur, grown.collect { case (r, _, u) if u.nonEmpty =>
-              (r, u) }.toMap)
-        def side(fs0: Seq[ChangeFile], kind: String)
-            : Option[(Long, String, Seq[ChangeFile])] =
-          if (fs0.isEmpty) None else Some((v, kind, fs0))
-        side(delFiles, "delete").toSeq ++ side(insFiles, "insert")
+      sides.toSeq.flatMap { case (added, removed) =>
+        val (delFiles, insFiles) = changeFiles(table, removed.toSeq,
+          added.map(_._1),
+          if (v == 1) Map.empty else resolveDvMap(table, inc, kinds, v - 1),
+          resolveDvMap(table, inc, kinds, v), what)
+        Seq("delete" -> delFiles, "insert" -> insFiles).collect {
+          case (kind, fs0) if fs0.nonEmpty => (v, kind, fs0)
+        }
       }
     }
   }
@@ -2502,7 +2474,8 @@ class Lake(spark: SparkSession, val root: String) {
         if (prevInv != null) {
           var cur = prevInv
           ((w + 1) to v).foreach { d =>
-            val (added, removedRel) = readDelta(table, d)
+            val (added, removedRel) =
+              commitSides(table, kinds, inc, d, isDelta = true).get
             val removedAbs = removedRel.map(r => s"$base/$r")
             val add = added.map { case (rel, b) => mapOne(rel, b) }
               .sortBy(t => (t._1, t._2))
@@ -2520,6 +2493,27 @@ class Lake(spark: SparkSession, val root: String) {
         (k._2 != inc || k._3 < v))
       mapped
     }
+
+  /** What commit `v` changed, table-relative: (added (rel, bytes),
+    * removed rels). A delta commit's sides are its body; a checkpoint
+    * carries the full set, so its sides are the fold diff against
+    * v−1 (v1 against the empty table). None when a checkpoint's base
+    * v−1 has left the log — nothing diffable survives. An FNF (a
+    * retention cut deleted a version mid-walk) propagates: the change
+    * plan and the churn guard refuse on it, vacuum skips the commit.
+    * The one reading of "what a commit changed" — the change plan,
+    * the churn guard ([[rewriteSwappedRels]]), vacuum's replay pins
+    * and the catalog index and inventory patches all go through it. */
+  private def commitSides(table: String, kinds: Seq[(Long, Boolean)],
+      inc: String, v: Long, isDelta: Boolean)
+      : Option[(Seq[(String, Long)], Set[String])] =
+    if (isDelta) Some(readDelta(table, v))
+    else if (v == 1L || kinds.exists(_._1 == v - 1)) {
+      val prev = if (v == 1L) Set.empty[String]
+        else resolveManifest(table, inc, kinds, v - 1).map(_._1).toSet
+      val cur = resolveManifest(table, inc, kinds, v)
+      Some((cur.filterNot(e => prev(e._1)), prev -- cur.map(_._1)))
+    } else None
 
   /** One delta commit's body: (added (rel, bytes), removed rels). */
   private def readDelta(table: String,
@@ -3413,56 +3407,9 @@ class Lake(spark: SparkSession, val root: String) {
 
   // ── File-grain key-range pruning for upsert ────────────────────────
 
-  /** Per-file [min, max] of `column` from the parquet FOOTER stats —
-    * pure metadata, no data pages read. Returns None when any row
-    * group lacks usable stats for the column (the caller must then
-    * treat the file as touched — conservative, never wrong). String
-    * stats compare with parquet's unsigned-lexicographic byte order
-    * (what Spark-written UTF8 min/max are ordered by); integral stats
-    * as longs. Driver-side reads over a thread pool: the file list is
-    * manifest-sized (model-state rule), and at fleet scale this table
-    * lives IN the snapshot manifest — the published formats persist
-    * exactly these ranges so planning never re-opens footers. */
   /** Footer opens performed by this Lake instance — the sidecar specs
     * and scale probes assert a warm plan costs ZERO of these. */
   val footerReads = new java.util.concurrent.atomic.AtomicLong
-
-  private[v3] def footerRange(path: String, column: String)
-      : Option[(Any, Any)] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    footerReads.incrementAndGet()
-    val in = HadoopInputFile.fromPath(new Path(path),
-      spark.sparkContext.hadoopConfiguration)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      if (blocks.isEmpty) return None
-      var mn: Any = null
-      var mx: Any = null
-      for (b <- blocks) {
-        val cc = b.getColumns.asScala
-          .find(_.getPath.toDotString == column).orNull
-        if (cc == null) return None
-        val st = cc.getStatistics
-        if (st == null || st.isEmpty || !st.hasNonNullValue) return None
-        val (lo, hi) = (st.genericGetMin, st.genericGetMax) match {
-          case (a: org.apache.parquet.io.api.Binary,
-                b2: org.apache.parquet.io.api.Binary) =>
-            (a.getBytes, b2.getBytes)
-          case (a: java.lang.Long, b2: java.lang.Long) =>
-            (a.longValue(), b2.longValue())
-          case (a: java.lang.Integer, b2: java.lang.Integer) =>
-            (a.longValue(), b2.longValue())
-          case _ => return None // float/boolean stats: not a key type
-        }
-        mn = if (mn == null || keyCmp(lo, mn) < 0) lo else mn
-        mx = if (mx == null || keyCmp(hi, mx) > 0) hi else mx
-      }
-      Some((mn, mx))
-    } finally reader.close()
-  }
 
   /** Driver-side footer-range cache keyed by (path, length, column):
     * repeated CDC batches against the same table re-plan without
@@ -3487,8 +3434,23 @@ class Lake(spark: SparkSession, val root: String) {
   private def rangeKey(path: String, bytes: Long, column: String): String =
     s"${new Path(path).toUri.getPath}:$bytes:$column"
 
-  private def footerRangeCached(path: String, bytes: Long,
-                                column: String): Option[(Any, Any)] = {
+  /** The table schema's type per column — the decimal scale gate of
+    * footer stats extraction ([[statsExtractable]]). */
+  private def statsTypes(table: String)
+      : String => Option[org.apache.spark.sql.types.DataType] =
+    effectiveSchema(table).fields.map(f => f.name -> f.dataType).toMap.get
+
+  /** Per-file [min, max] of `column` from the parquet FOOTER stats
+    * ([[footerRangesMulti]] over one column) — pure metadata, no data
+    * pages read, cached per (path, bytes, column). None when any row
+    * group lacks usable stats (the caller then treats the file as
+    * touched — conservative, never wrong). Driver-side reads over a
+    * thread pool ([[fileRanges]]): the file list is manifest-sized
+    * (model-state rule), and the published formats persist exactly
+    * these ranges so planning never re-opens footers. */
+  private def footerRangeCached(path: String, bytes: Long, column: String,
+      expected: String => Option[org.apache.spark.sql.types.DataType])
+      : Option[(Any, Any)] = {
     // path + size from the already-held inventory listing — NO extra
     // getFileStatus round-trip per file per batch. Safe because this
     // lake never rewrites a file in place: every landing mints a
@@ -3517,7 +3479,7 @@ class Lake(spark: SparkSession, val root: String) {
       statsFoldedShards.clear()
     }
     rangeCache.computeIfAbsent(rangeKey(path, bytes, column),
-      _ => footerRange(path, column))
+      _ => footerRangesMulti(path, Seq(column), expected)(column))
   }
 
   // ── Persisted file-stats sidecar ───────────────────────────────────
@@ -3774,6 +3736,7 @@ class Lake(spark: SparkSession, val root: String) {
                              column: String)
       : Map[String, Option[(Any, Any)]] = {
     loadStats(table)
+    lazy val types = statsTypes(table)
     val (hit, miss) = files.partition(f =>
       rangeCache.containsKey(rangeKey(f._2, f._3, column)))
     val fresh: Seq[(String, String, Long, Option[(Any, Any)])] =
@@ -3787,7 +3750,8 @@ class Lake(spark: SparkSession, val root: String) {
           scala.concurrent.Await.result(
             scala.concurrent.Future.sequence(miss.map {
               case (chain, path, bytes) => scala.concurrent.Future {
-                (chain, path, bytes, footerRangeCached(path, bytes, column))
+                (chain, path, bytes,
+                  footerRangeCached(path, bytes, column, types))
               }
             }),
             scala.concurrent.duration.Duration.Inf)
@@ -3802,7 +3766,7 @@ class Lake(spark: SparkSession, val root: String) {
     // instead of surfacing a MatchError to the planner
     (hit.map(f => f._2 ->
         Option(rangeCache.get(rangeKey(f._2, f._3, column)))
-          .getOrElse(footerRangeCached(f._2, f._3, column))) ++
+          .getOrElse(footerRangeCached(f._2, f._3, column, types))) ++
       fresh.map(f => f._2 -> f._4)).toMap
   }
 
@@ -3888,9 +3852,11 @@ class Lake(spark: SparkSession, val root: String) {
   }
 
   /** One footer open, every requested column's [min, max] extracted —
-    * the multi-column twin of [[footerRange]] (identical values for
-    * the overlapping string/integral cases, so both pruning paths
-    * share one cache). Missing columns, guarded-out physical types
+    * the one footer-stats reader: the commit-time stats collection and
+    * the upsert planner's per-column misses ([[footerRangeCached]])
+    * both fill [[rangeCache]] from it, so a `(path, bytes, column)`
+    * entry holds the same value whichever path filled it. Missing
+    * columns, guarded-out physical types
     * and stat-less footers yield None ("known unusable" — persisted
     * too, so the file is never re-opened for them). `expected` is the
     * table schema's type per column (the decimal scale gate in
@@ -4065,10 +4031,8 @@ class Lake(spark: SparkSession, val root: String) {
                               added: Seq[(String, Long)]): Unit = {
     val cols = statsColumns(table)
     if (cols.isEmpty || added.isEmpty) return
-    // schema types feed the extraction's decimal scale/precision gate
-    // (statsExtractable): resolved once per collection, not per file
-    val schemaTypes = effectiveSchema(table).fields
-      .map(f => f.name -> f.dataType).toMap
+    // resolved once per collection, not per file
+    val types = statsTypes(table)
     loadStats(table)
     val work = added.flatMap { case (rel, bytes) =>
       val abs = s"${dir(table)}/$rel"
@@ -4092,7 +4056,7 @@ class Lake(spark: SparkSession, val root: String) {
         scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(work.map {
             case (rel, abs, bytes, missing) => scala.concurrent.Future {
-              footerRangesMulti(abs, missing, schemaTypes.get)
+              footerRangesMulti(abs, missing, types)
                 .toSeq.map { case (c, r) =>
                   rangeCache.put(rangeKey(abs, bytes, c), r)
                   (rel, bytes, c, r)
@@ -4411,7 +4375,7 @@ class Lake(spark: SparkSession, val root: String) {
 
   /** Normalize a driver-side key value into the domain [[keyCmp]]
     * compares (UTF-8 bytes for strings, widened long for integrals) —
-    * the same domain [[footerRange]] returns stats in. */
+    * the same domain [[footerRangesMulti]] returns stats in. */
   private def asCmp(v: Any): Any = v match {
     case s: String => s.getBytes("UTF-8")
     case n: java.lang.Number => n.longValue()
@@ -5696,7 +5660,9 @@ class Lake(spark: SparkSession, val root: String) {
   }
 
   /** Retention GC: keep the newest `keepLast` pins, delete the older
-    * ones, then delete every RETIRED file nothing still references.
+    * ones, then delete every RETIRED file nothing still references —
+    * neither a surviving pin nor the change replay of a retained
+    * commit.
     * Live table files are never touched — vacuum only ever shrinks
     * history, not the table. After a vacuum, [[readAt]] on an expired
     * version fails with "no snapshot"; on a kept version it still
@@ -5749,62 +5715,58 @@ class Lake(spark: SparkSession, val root: String) {
     // still readable, so it keeps pinning its files (the pin set below
     // re-lists the pins) and is not counted as expired
     val reallyExpired = expired.filter(v => fs.delete(pinPath(table, v), false))
+    // ONE commit-log listing feeds both GC passes. Every retained
+    // commit's vector map is resolved once: the replay pins below diff
+    // consecutive maps, the vector GC keeps whatever any map names
+    // (a vector published after this listing is younger than it, so
+    // the GC's age gate holds it).
+    val (kinds, inc) = manifestState(table)
+    val dvd = dvDir(table)
+    val hasDvs = fs.exists(dvd)
+    val dvMaps: Map[Long, Map[String, Dv.Ref]] =
+      if (!hasDvs) Map.empty
+      else kinds.map { case (v, _) =>
+        v -> resolveDvMap(table, inc, kinds, v, cache = false)
+      }.toMap
     // Two pin sources protect retired files from the GC below:
     //  1. every surviving PIN's FULL folded file set (pinned VERSION AS
     //     OF reads) — not only the changed sides of retained commits:
     //     a rewrite-only commit after the pin replay-pins nothing
     //     below, yet the pinned read still names its files;
-    //  2. the RETAINED COMMIT LOG — every file a retained commit's
-    //     change can reference (delta sides; checkpoint commits by
-    //     fold diff). A CDC consumer lagging WITHIN the retained
-    //     window (the manifest.minRetainedCommits floor) replays
-    //     those commits through resolveLiveOrRetired, so vacuuming
-    //     them would break a consumer the retention floor promises
-    //     to serve — the published formats guard this with a
-    //     time-based retention heuristic; the commit log lets this
-    //     lake express the replayable window EXACTLY. Files leave
-    //     the pin set the moment retention expires their commits,
-    //     at which point the feed already refuses loudly BEFORE any
-    //     file access (version-range check), so the old
-    //     missing-file manifestation is unreachable for streams.
+    //  2. the RETAINED COMMIT LOG — exactly the files the change plan
+    //     can read for a retained data-changing commit: its sides
+    //     ([[commitSides]]) plus the surviving files whose deletion
+    //     vector it changed ([[dvChangedRels]] — a DV-only commit has
+    //     empty sides, yet its replay reads the file's position diff).
+    //     A CDC consumer lagging WITHIN the retained window (the
+    //     manifest.minRetainedCommits floor) replays those commits
+    //     through resolveLiveOrRetired, so vacuuming them would break
+    //     a consumer the retention floor promises to serve — the
+    //     published formats guard this with a time-based retention
+    //     heuristic; the commit log lets this lake express the
+    //     replayable window EXACTLY. Files leave the pin set when
+    //     retention expires their commits, and the feed then refuses
+    //     on the version range before it opens any file. Rewrite-only
+    //     commits (compaction/clustering/dv-materialize) are invisible
+    //     to the feeds and pin nothing; header-less legacy commits read
+    //     op "" and pin conservatively. A commit the plan refuses (a
+    //     checkpoint whose base expired) or that a racing retention
+    //     cut deleted mid-walk (FNF only — any other IO failure aborts
+    //     the vacuum rather than GC a replayable pin) pins nothing.
     val keptRefs: Set[String] = {
       val b = Set.newBuilder[String]
-      val (kinds, inc) = manifestState(table)
       // pins hold the log, so each pinned commit is still retained
       pinnedCommits(table, inc).distinct.filter(c => kinds.exists(_._1 == c))
         .foreach(c => b ++= resolveManifest(table, inc, kinds, c).map(_._1))
       kinds.foreach { case (v, isDelta) =>
-        // rewrite-only commits (compaction/clustering) are INVISIBLE
-        // to the change feeds — changePlanBetween skips them — so
-        // their swapped-out files need no replay pin; only
-        // DATA-CHANGING commits' sides do. Header-less legacy commits
-        // read op "" and pin conservatively.
-        val op = commitHeaderOf(table, inc, v, isDelta)._2
-        if (!rewriteOps(op)) {
-          if (isDelta) {
-            try {
-              val (a, r) = readDelta(table, v)
-              b ++= a.map(_._1); b ++= r
-            } catch {
-              // a racing retention cut deleted this version mid-walk:
-              // its change is no longer replayable, so not pinning
-              // its files is correct (FNF only — any other IO failure
-              // aborts the vacuum rather than GC a replayable pin)
-              case _: java.io.FileNotFoundException => ()
-            }
-          } else if (v == 1L) {
-            // the table's first publish: its change IS its full set
-            // (changePlanBetween diffs v1 against empty), so a from-0
-            // replay needs every file it named
-            b ++= resolveManifest(table, inc, kinds, 1L).map(_._1)
-          } else if (kinds.exists(_._1 == v - 1)) {
-            val prev = resolveManifest(table, inc, kinds, v - 1)
-              .map(_._1).toSet
-            val cur = resolveManifest(table, inc, kinds, v).map(_._1).toSet
-            b ++= (prev -- cur); b ++= (cur -- prev)
-          }
-          // a checkpoint whose BASE (v-1) has expired is unreplayable
-          // (changePlanBetween refuses the range) - no pin needed
+        if (!rewriteOps(commitHeaderOf(table, inc, v, isDelta)._2)) {
+          try commitSides(table, kinds, inc, v, isDelta).foreach {
+            case (added, removed) =>
+              val sides = removed ++ added.map(_._1)
+              b ++= sides
+              b ++= dvChangedRels(dvMaps.getOrElse(v - 1, Map.empty),
+                dvMaps.getOrElse(v, Map.empty), sides)
+          } catch { case _: java.io.FileNotFoundException => () }
         }
       }
       b.result()
@@ -5904,12 +5866,9 @@ class Lake(spark: SparkSession, val root: String) {
     // `staleCommitMs` sweeps — the age gate protects vectors staged by
     // an in-flight write that hasn't published yet (they're
     // unreferenced until their commit lands).
-    val dvd = dvDir(table)
-    if (fs.exists(dvd)) {
-      val (kindsV, incV) = manifestState(table)
-      val pinnedDvNames: Set[String] = kindsV.flatMap { case (v, _) =>
-        resolveDvMap(table, incV, kindsV, v, cache = false).values.map(_.name)
-      }.toSet
+    if (hasDvs) {
+      val pinnedDvNames: Set[String] =
+        dvMaps.valuesIterator.flatMap(_.valuesIterator.map(_.name)).toSet
       val now = System.currentTimeMillis()
       fs.listStatus(dvd).foreach { st =>
         if (st.isFile && !pinnedDvNames(st.getPath.getName) &&

@@ -112,6 +112,19 @@ class ExtensionsSpec extends SparkSpec {
           |  10.0D) AS l
           |""".stripMargin).head().getSeq[Seq[Long]](0)
       assert(pql == Seq(Seq(20L, 0L)))
+      // clean text: markup stripped, the address redacted — the same
+      // passes the Scala twin applies
+      val raw = "<b>mail</b> me at a@b.com"
+      val cleaned = s2.sql(s"SELECT graft_clean_text('$raw') AS c")
+        .head().getString(0)
+      assert(cleaned == graft.functions.CleanTextExpr.clean(
+        org.apache.spark.unsafe.types.UTF8String.fromString(raw)).toString)
+      // the injected set IS the builder table the programmatic
+      // register calls read: every name in it resolves in s2
+      graft.functions.NativeFunctions.builders.map(_._1).foreach { fn =>
+        assert(s2.catalog.functionExists(fn),
+          s"function $fn not injected by GraftExtensions")
+      }
       // the lake maintenance/history TVFs ride the same injection
       // (injectTableFunction): a conf-deployed session resolves them
       // without any programmatic register call

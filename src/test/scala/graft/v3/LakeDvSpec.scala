@@ -329,6 +329,63 @@ class LakeDvSpec extends SparkSpec {
       tc.head.getAs[Long]("block_number") == 1007L, tc.mkString("; "))
   }
 
+  /** Two single-file appends on a vector-enabled table whose log keeps
+    * one commit past its checkpoint, then a short log (20 refreshes). */
+  private def shortLogDvLake(tag: String): Lake = {
+    val (lake, _) = freshLake(tag)
+    dvOn(lake)
+    lake.append(rows(0 until 40).coalesce(1), Schemas.Nfp)
+    lake.append(rows(40 until 80).coalesce(1), Schemas.Nfp)
+    lake.setTableProperties(Schemas.Nfp,
+      Map("manifest.minRetainedCommits" -> "1"))
+    (0 until 20).foreach(_ => lake.refreshManifest(Schemas.Nfp))
+    lake
+  }
+
+  private def changeKeys(lake: Lake, from: Long, to: Long): Seq[String] =
+    lake.changesBetweenCommits(Schemas.Nfp, from, to).collect().toSeq
+      .map(r => s"${r.getAs[String]("_change_type")}|" +
+        r.getAs[Long]("block_number")).sorted
+
+  test("vacuum keeps the file of a retained vector-only delete: its change replays after materializeDvs retires the file") {
+    val lake = shortLogDvLake("dv-vacuum-pin")
+    val v0 = lake.latestCommitVersion(Schemas.Nfp).get
+    assert(lake.deleteWhere(Schemas.Nfp,
+      col("block_number").between(1000L, 1004L), retain = true)
+      .landedFiles == 0)
+    val v1 = lake.latestCommitVersion(Schemas.Nfp).get
+    val want = changeKeys(lake, v0, v1)
+    assert(want == (1000L to 1004L).map(b => s"delete|$b"), want)
+    // the vector-bearing file is rewritten away (a rewrite-only
+    // commit) and retired; the delete commit is still in the log
+    assert(lake.materializeDvs(Schemas.Nfp) == 1)
+    lake.vacuum(Schemas.Nfp, keepLast = 0, staleCommitMs = 0L)
+    assert(changeKeys(lake, v0, v1) == want,
+      "vacuum freed a file a retained commit's change replay reads")
+    assert(lake.read(Schemas.Nfp).count() == 75L)
+  }
+
+  test("vacuum keeps the file of a retained vector roll-back: a restore's revived rows replay after the file is retired") {
+    val lake = shortLogDvLake("dv-vacuum-restore")
+    val pin = lake.snapshot(Schemas.Nfp)
+    assert(lake.deleteWhere(Schemas.Nfp,
+      col("block_number").between(1000L, 1004L), retain = true)
+      .landedFiles == 0)
+    val vDel = lake.latestCommitVersion(Schemas.Nfp).get
+    lake.restoreTable(Schemas.Nfp, pin)
+    val vRes = lake.latestCommitVersion(Schemas.Nfp).get
+    val want = changeKeys(lake, vDel, vRes)
+    assert(want == (1000L to 1004L).map(b => s"insert|$b"), want)
+    // a second vector on the same file, materialized: the file retires
+    assert(lake.deleteWhere(Schemas.Nfp,
+      col("block_number") === 1010L, retain = true).landedFiles == 0)
+    assert(lake.materializeDvs(Schemas.Nfp) == 1)
+    lake.vacuum(Schemas.Nfp, keepLast = 0, staleCommitMs = 0L)
+    assert(changeKeys(lake, vDel, vRes) == want,
+      "vacuum freed a file a retained vector roll-back replays")
+    assert(lake.read(Schemas.Nfp).count() == 79L)
+  }
+
   test("writer gate: a table stamped #minWriter above this build refuses every write loudly; reader gate twin at #minReader") {
     val (lake, root) = freshLake("dv-gate")
     // two files in one chain so compact has a real multi-file bin
